@@ -79,15 +79,14 @@ def md5_rot_pair(i: int) -> tuple[int, int]:
     return 1 + (7 * i) % 59, 1 + (13 * i) % 59
 
 
-def _rot60(col, r: int) -> "F.Column":
+def _rot60(expr: str, r: int) -> str:
     """Rotate a 60-bit value left by r (1..59) without overflowing a
     64-bit long: mask the bits that would leave the 60-bit window
     BEFORE the left shift — the exact same expression DuckDB evaluates
-    (its << is overflow-checked, so an unmasked rotate would throw)."""
+    (its << is overflow-checked, so an unmasked rotate would throw).
+    A Spark SQL fragment over the long-valued SQL expression ``expr``."""
     low = (1 << (60 - r)) - 1
-    return F.shiftleft(col.bitwiseAND(F.lit(low)), r).bitwiseOR(
-        F.shiftrightunsigned(col, 60 - r)
-    )
+    return f"(shiftleft({expr} & {low}, {r}) | shiftrightunsigned({expr}, {60 - r}))"
 
 
 def content_hash(col) -> "F.Column":
@@ -177,29 +176,23 @@ def minhash_signatures(
             )
         )
 
-        def _minhash(i: int):
+        def _minhash(i: int) -> str:
             r1, r2 = md5_rot_pair(i)
-            return F.array_min(
-                F.zip_with(
-                    "_h1",
-                    "_h2",
-                    lambda a, b: _rot60(a, r1).bitwiseXOR(_rot60(b, r2)),
-                )
-            )
+            return (f"array_min(zip_with(_h1, _h2, (a, b) -> "
+                    f"{_rot60('a', r1)} ^ {_rot60('b', r2)}))")
 
     else:
         base = df.select(F.col(id_col), sh).withColumn(
             "_hashes", F.transform("_shingles", lambda s: F.xxhash64(s))
         )
 
-        def _minhash(i: int):
-            # single-arg lambda: a 2-arg lambda would receive the ARRAY
-            # INDEX as its second parameter from F.transform
-            seed = F.lit(i)
-            return F.array_min(F.transform("_hashes", lambda h: F.xxhash64(seed, h)))
+        def _minhash(i: int) -> str:
+            return f"array_min(transform(_hashes, h -> xxhash64({i}, h)))"
 
-    sig = F.array(*[_minhash(i) for i in range(num_hashes)])
-    return base.select(id_col, sig.alias("minhash"))
+    # the k-member array as ONE SQL string: the same Catalyst expressions
+    # as k chains of Column calls, built in a single py4j round-trip
+    sig = ", ".join(_minhash(i) for i in range(num_hashes))
+    return base.select(id_col, F.expr(f"array({sig})").alias("minhash"))
 
 
 def minhash_lsh_candidates(
@@ -247,25 +240,21 @@ def lsh_candidates_from_signatures(
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
     r = num_hashes // bands
-    if hash_family == "md5":
-        band_cols = [
-            F.concat_ws(",", *[
-                F.element_at("minhash", b * r + j + 1).cast("string") for j in range(r)
-            ]).alias("bucket")
-            for b in range(bands)
-        ]
-    else:
-        band_cols = [
-            F.xxhash64(F.concat_ws(",", F.lit(b), *[
-                F.element_at("minhash", b * r + j + 1).cast("string") for j in range(r)
-            ])).alias("bucket")
-            for b in range(bands)
-        ]
+
+    def bucket(b: int) -> str:
+        members = ", ".join(
+            f"CAST(element_at(minhash, {b * r + j + 1}) AS STRING)" for j in range(r)
+        )
+        if hash_family == "md5":
+            return f"concat_ws(',', {members})"
+        return f"xxhash64(concat_ws(',', {b}, {members}))"
+
+    # all band keys as ONE SQL string (see minhash_signatures)
+    structs = ", ".join(
+        f"struct({b} AS band, {bucket(b)} AS bucket)" for b in range(bands)
+    )
     exploded = sigs.select(
-        id_col,
-        F.explode(F.array(*[F.struct(F.lit(b).alias("band"), band_cols[b]) for b in range(bands)])).alias(
-            "bb"
-        ),
+        id_col, F.expr(f"explode(array({structs}))").alias("bb")
     ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
     if bucket_cap is not None:
         exploded = _cap_buckets(exploded, ["band", "bucket"], bucket_cap)
@@ -311,11 +300,8 @@ def group_minhash_signatures(
     sigs = minhash_signatures(
         df, text_col, group_col, num_hashes, shingle_n, hash_family
     )
-    return sigs.groupBy(group_col).agg(
-        F.array(
-            *[F.min(F.element_at("minhash", i + 1)) for i in range(num_hashes)]
-        ).alias("minhash")
-    )
+    mins = ", ".join(f"min(element_at(minhash, {i + 1}))" for i in range(num_hashes))
+    return sigs.groupBy(group_col).agg(F.expr(f"array({mins})").alias("minhash"))
 
 
 def group_minhash_lsh_candidates(
@@ -398,22 +384,16 @@ def simhash(
     toks = fan_out(df.select(F.col(id_col), F.col(text_col))).select(
         F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("tok")
     ).select(id_col, token_hash(F.col("tok")).alias("h"))
-    bit_sums = toks.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("_tot"),
-        *[
-            F.sum(F.shiftrightunsigned(F.col("h"), i).bitwiseAND(F.lit(1))).alias(f"b{i}")
-            for i in range(64)
-        ],
+    # the 64 per-bit sums and the 64-term fingerprint as ONE SQL string:
+    # the same Catalyst aggregate and arithmetic as ~1,000 Column calls,
+    # built in a single py4j round-trip
+    fp = " + ".join(
+        f"(CASE WHEN sum(shiftrightunsigned(h, {i}) & 1) * 2 > count(1) "
+        f"THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END * "
+        f"{1 << i if i < 63 else -(1 << 63)})"
+        for i in range(64)
     )
-    fp = None
-    for i in range(64):
-        bit = (
-            F.when(2 * F.col(f"b{i}") > F.col("_tot"), F.lit(1).cast("long"))
-            .otherwise(F.lit(0).cast("long"))
-        )
-        term = bit * F.lit(1 << i if i < 63 else -(1 << 63))
-        fp = term if fp is None else fp + term
-    return bit_sums.select(id_col, fp.alias("simhash"))
+    return toks.groupBy(id_col).agg(F.expr(fp).alias("simhash"))
 
 
 def hamming64(a, b) -> "F.Column":

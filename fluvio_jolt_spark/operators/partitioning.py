@@ -28,6 +28,8 @@ from __future__ import annotations
 
 import os
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame
 
 # Compressed input bytes per fanned-out partition. Production deployments
@@ -55,11 +57,14 @@ def fan_out(df: DataFrame, min_partitions: "int | None" = None) -> DataFrame:
     sc = df.sparkSession.sparkContext
     target = int(min_partitions or sc.defaultParallelism)
     if min_partitions is None:
+        # an error the JVM raises computing the estimate (raw, or as the
+        # PySpark exception it converts to) keeps the full-parallelism
+        # target; a Python-side error is a bug and propagates
         try:
             size = int(
                 df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
             )
-        except Exception:
+        except (Py4JJavaError, CapturedException):
             size = None
         if size is not None:
             target = min(target, max(1, size // FAN_OUT_GRAIN))

@@ -335,18 +335,25 @@ def embedding_near_dup(
         )
         .distinct()
     )
-    vecs = df.select(F.col(id_col), _as_double(F.col(vec_col)).alias("_v"))
-    joined = (
-        cands.join(vecs.select(F.col(id_col).alias("id_a"), F.col("_v").alias("_va")), "id_a")
-        .join(vecs.select(F.col(id_col).alias("id_b"), F.col("_v").alias("_vb")), "id_b")
+    # each vector's norm once per id, beside the vector, so the verify
+    # stage runs only the dot-product fold per pair; the norm is the same
+    # fold over the same doubles, so dot / (na * nb) is bit-identical
+    vecs = df.select(F.col(id_col), _as_double(F.col(vec_col)).alias("_v")).select(
+        id_col, "_v",
+        F.sqrt(F.aggregate("_v", F.lit(0.0), lambda s, x: s + x * x)).alias("_n"),
     )
+
+    def side(s: str) -> DataFrame:
+        return vecs.select(F.col(id_col).alias(f"id_{s}"), F.col("_v").alias(f"_v{s}"),
+                           F.col("_n").alias(f"_n{s}"))
+
+    joined = cands.join(side("a"), "id_a").join(side("b"), "id_b")
     dot = F.aggregate(
         F.zip_with(F.col("_va"), F.col("_vb"), lambda a, b: a * b),
         F.lit(0.0),
         lambda s, x: s + x,
     )
-    norm = lambda c: F.sqrt(F.aggregate(c, F.lit(0.0), lambda s, x: s + x * x))  # noqa: E731
-    sim = dot / (norm(F.col("_va")) * norm(F.col("_vb")))
+    sim = dot / (F.col("_na") * F.col("_nb"))
     return joined.select("id_a", "id_b", sim.alias("cos_sim")).filter(
         F.col("cos_sim") >= threshold
     )

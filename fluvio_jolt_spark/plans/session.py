@@ -64,6 +64,19 @@ def build_session(
         # effective at JVM launch; a no-op when attaching to an
         # existing JVM via getOrCreate.
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
+        # Off: per-call call-site capture. With it on (the PySpark 4
+        # default), every Column / `functions` call walks the Python
+        # stack and makes ~4 extra py4j round-trips (a conf read, a
+        # PySparkCurrentOrigin reflection lookup, set, clear); PySpark's
+        # own comment on `_enable_debugging_cache` says the option exists
+        # "to reduce performance slowdown". Measured: simhash_candidates'
+        # plan build falls from 11,132 to 2,912 py4j commands. Lost: the
+        # Python file:line in an error's "DataFrame query context"; the
+        # error message and its SQL context stay. PySpark caches the flag
+        # process-wide at the first Column call made once a session
+        # exists, so to debug, start the process with
+        # extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

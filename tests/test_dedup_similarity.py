@@ -3,6 +3,8 @@ tables, with brute-force oracles computed in numpy/python."""
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -44,6 +46,42 @@ def docs(spark):
 @pytest.fixture(scope="module")
 def emb(spark):
     return spark.read.parquet(f"{SF}/embeddings.parquet")
+
+
+# Default-family (xxhash64) simhash fingerprints and 8-member minhash
+# signatures of fixed docs, pinned from the earlier build that assembled
+# these wide expressions from per-Column calls; the SQL-string build must
+# reproduce them exactly. (The md5 family is value-checked by the
+# simhash_docs / minhash_lsh_docs DuckDB oracles.)
+FIXED_DOCS = [
+    (1, "the quick brown fox jumps over the lazy dog"),
+    (2, "the quick brown fox jumps over the lazy cat"),
+    (3, "lorem ipsum dolor sit amet consectetur"),
+    (4, "spark"),
+]
+XXHASH_SIMHASH = {
+    1: -7573889167326994222,
+    2: -7573326217371541038,
+    3: 291355278463488016,
+    4: -1960931134668248110,
+}
+XXHASH_MINHASH = {
+    1: [-7526567701951179316, -3852586997419460549, -8867447697322737600, -3134887495879601404,
+        -8108882996475918782, -8867486211881703012, -8200088960888482637, -4886712486153508225],
+    2: [-5802413506945132427, -3852586997419460549, -6221601534664984183, -3134887495879601404,
+        -8108882996475918782, -7790663405383987669, -7400761947062928291, -3133361094225044761],
+    3: [-3818406516989703114, -4767513760228713700, -4995551965190013198, -8833303729439705644,
+        -7022945571440959465, -7299604345043861689, -5879778754195108155, -8064871363854417124],
+    4: [-6255646129004923430, -5929433471247939172, 3088537010953713893, 7929008332982111475,
+        -3383924761919486210, 5466443031337142930, -6853763074316256693, 428332904493527255],
+}
+
+
+def test_xxhash_simhash_and_minhash_pinned(spark):
+    docs = spark.createDataFrame(FIXED_DOCS, "doc_id long, text string")
+    assert {r.doc_id: r.simhash for r in simhash(docs).collect()} == XXHASH_SIMHASH
+    sigs = minhash_signatures(docs, num_hashes=8).collect()
+    assert {r.doc_id: list(r.minhash) for r in sigs} == XXHASH_MINHASH
 
 
 def test_exact_dedup_finds_planted_dups(spark, docs):
@@ -249,6 +287,73 @@ def test_embedding_near_dup_self(spark, emb):
     df = emb.unionByName(dup)
     out = embedding_near_dup(df, threshold=0.999).toPandas()
     assert ((out.id_a == 1) & (out.id_b == 99999)).any()
+
+
+def _cos_per_pair(va, vb):
+    """The verify stage's earlier per-pair formula: three folds per pair
+    (the dot product and both norms)."""
+    dot = F.aggregate(F.zip_with(va, vb, lambda a, b: a * b), F.lit(0.0), lambda s, x: s + x)
+
+    def norm(c):
+        return F.sqrt(F.aggregate(c, F.lit(0.0), lambda s, x: s + x * x))
+
+    return dot / (norm(va) * norm(vb))
+
+
+def _with_per_pair_cos(pairs, df):
+    v = df.select("vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v"))
+    return (
+        pairs.join(v.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va")), "id_a")
+        .join(v.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb")), "id_b")
+        .withColumn("ref", _cos_per_pair(F.col("va"), F.col("vb")))
+    )
+
+
+def test_embedding_near_dup_cos_sim_bit_identical(spark):
+    """Norms computed once per id give the same bits as the per-pair
+    formula on random, near-orthogonal (dots near 0), NaN-bearing and
+    tiny-magnitude vectors. One plane and a threshold below -1 keep
+    every same-bucket pair, NaN cosines included (Spark orders NaN above
+    every number)."""
+    rng = np.random.RandomState(11)
+    dims = 16
+    rows = [(i, rng.normal(size=dims).tolist()) for i in range(60)]
+    base = rng.normal(size=dims)
+    rows.append((100, base.tolist()))
+    for j in range(20):
+        v = rng.normal(size=dims)
+        v -= (v @ base) / (base @ base) * base
+        rows.append((200 + j, v.tolist()))
+    for j in range(5):
+        v = rng.normal(size=dims).tolist()
+        v[j] = float("nan")
+        rows.append((300 + j, v))
+    for j in range(5):
+        rows.append((400 + j, (rng.normal(size=dims) * 1e-15).tolist()))
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    pairs = embedding_near_dup(df, n_planes=1, threshold=-2.0)
+    got = _with_per_pair_cos(pairs, df).collect()
+    assert len(got) > 1000
+    assert sum(np.isnan(r.cos_sim) for r in got) > 0
+    for r in got:
+        assert struct.pack("<d", r.cos_sim) == struct.pack("<d", r.ref), (r.id_a, r.id_b)
+
+
+def test_embedding_near_dup_zero_vector_raises_as_per_pair(spark):
+    """A zero vector's cosine is 0/0: under ANSI arithmetic both the
+    per-id norms and the per-pair formula raise DIVIDE_BY_ZERO rather
+    than emit a value."""
+    from pyspark.errors import ArithmeticException
+
+    v = [1.0, -2.0, 3.0, 0.5]
+    df = spark.createDataFrame(
+        [(0, [0.0] * 4), (1, v), (2, [-x for x in v])], "vec_id long, embedding array<float>"
+    )
+    with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
+        embedding_near_dup(df, n_planes=1, threshold=-2.0).collect()
+    every_pair = spark.createDataFrame([(0, 1), (0, 2), (1, 2)], "id_a long, id_b long")
+    with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
+        _with_per_pair_cos(every_pair, df).collect()
 
 
 def test_embedding_near_dup_banded_recall(spark, emb):

@@ -5,6 +5,7 @@ and never touches streaming frames."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from fluvio_jolt_spark.operators.partitioning import fan_out
@@ -48,3 +49,45 @@ def test_fan_out_preserves_values(spark):
     out = fan_out(df)
     assert out.rdd.getNumPartitions() > 1
     assert sorted(r.v for r in out.collect()) == [2 * i for i in range(200_000)]
+
+
+def test_fan_out_without_size_statistic_uses_full_parallelism(spark):
+    # a frame over an RDD carries no size statistic (the optimizer
+    # reports spark.sql.defaultSizeInBytes): full parallelism, no error
+    par = spark.sparkContext.defaultParallelism
+    rdd = spark.sparkContext.parallelize([(i,) for i in range(100)], 1)
+    df = spark.createDataFrame(rdd, "id long")
+    out = fan_out(df)
+    assert out.rdd.getNumPartitions() == par
+    assert sorted(r.id for r in out.collect()) == list(range(100))
+
+
+class _EstimateFails:
+    """A frame whose size estimate raises in the JVM."""
+
+    def __init__(self, df, fail):
+        self._df, self._fail = df, fail
+
+    def __getattr__(self, name):
+        return getattr(self._df, name)
+
+    @property
+    def _jdf(self):
+        self._fail(self._df.sparkSession._jvm)
+
+
+@pytest.mark.parametrize(
+    "fail",
+    [
+        # arrives as a raw Py4JJavaError
+        lambda jvm: jvm.java.util.Objects.requireNonNull(None),
+        # arrives converted to a PySpark exception
+        lambda jvm: jvm.java.lang.Long.parseLong("no statistic"),
+    ],
+    ids=["py4j", "converted"],
+)
+def test_fan_out_failed_size_estimate_uses_full_parallelism(spark, fail):
+    par = spark.sparkContext.defaultParallelism
+    df = spark.range(10).coalesce(1)
+    out = fan_out(_EstimateFails(df, fail))
+    assert out.rdd.getNumPartitions() == par
