@@ -3,17 +3,16 @@ plus headline query timings at $SPARK_GRAFT_SF_DIR.
 
 Prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
-   "turns_per_sec": ..., "scaling": {...}}
+   "turns_per_sec": ..., "membw_ceiling": {...}}
 
 The flagship pipeline is the north-rule job: synthetic transcripts at
 the sf's density → vectorized Jolt reshape of every turn payload →
 windowed features (salted) → point-in-time as-of join → parquet sink.
 
-Scaling evidence (BASELINE.md protocol): run the identical flagship job
-at local[8] and local[32] in subprocesses and report
-efficiency = T8 / T32 / 4 (≥ 0.8 target). Enabled via
-SPARK_GRAFT_SCALING=1 (the default single-process run keeps the
-driver's per-round bench fast).
+Env: SPARK_GRAFT_SF_DIR (the input tables; default in SF_DIR below),
+SPARK_GRAFT_CPUS (default: the machine's core count). The flagship
+stage table and 1→4 scaling come from perfbench (perfbench/README.md),
+not from this script.
 """
 
 from __future__ import annotations
@@ -30,7 +29,7 @@ REPO = Path(__file__).resolve().parent
 sys.path.insert(0, str(REPO))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
 def _read_proc_stat() -> dict | None:
@@ -78,25 +77,6 @@ def _sf_from_dir(sf_dir: str) -> float:
         return float(name.replace("sf", ""))
     except ValueError:
         return 0.1
-
-
-def run_flagship(spark, n_turns: int, out_dir: str) -> int:
-    """North-rule job with a columnar-friendly plan shape:
-
-    1. window features + as-of join run on a NARROW projection
-       (conv_id, turn_idx, role, tool, ts ≈ 50 B/row) — the KB-sized
-       text payload never enters those shuffles;
-    2. the Jolt reshape is a narrow map over (keys + text) — no shuffle;
-    3. one single wide shuffle joins payload + reshape output back to
-       the feature vectors at the end.
-    """
-    from pyspark.sql import functions as F
-
-    from fluvio_jolt_spark.sources.transcripts import read_transcripts
-
-    turns, snaps = read_transcripts(spark, n_turns=n_turns)
-    run_flagship_frames(spark, turns, snaps, out_dir)
-    return n_turns
 
 
 def _median_run(fn, runs: int = 3) -> float:
@@ -442,169 +422,17 @@ def main() -> None:
     except RuntimeError as exc:  # report, don't sink the whole bench
         result["flagship_bucketed"] = {"error": str(exc)[:500]}
 
-    if os.environ.get("SPARK_GRAFT_SCALING") == "1":
-        result["scaling"] = scaling_runs(n_turns)
-
     result["host_health"] = host_health(stat_before)
     # DRAM-supply telemetry beside the CPU canary: the two degrade
     # independently on this shared box (a co-tenant can collapse the
     # memory bus while single-thread CPU stays healthy — BENCH/BASELINE.md
     # pass-7 signature: 2-proc bandwidth INFLATES above ~22 GB/s while
-    # 8-proc drops below ~70). The 32-core flagship is memory-parallel,
-    # so only this probe decodes such a window.
-    result["membw_ceiling"] = _membw_ceiling([2, 8])
+    # 8-proc drops below ~70). The flagship is memory-parallel, so only
+    # this probe decodes such a window. Probe sizes follow the cores the
+    # bench runs on (1→4 on a 4-core box).
+    result["membw_ceiling"] = _membw_ceiling(sorted({max(1, CPUS // 4), CPUS}))
 
     print(json.dumps(result))
-
-
-def scaling_runs(n_turns: int, pairs=((2, 8), (8, 32)), rounds: int = 3) -> dict:
-    """N→4N scaling evidence, sandbox protocol (see BENCH/BASELINE.md):
-
-    Shuffle partitions = 2×cores in each config (r2: measured the most
-    stable granularity at this data size; AQE coalesces the rest).
-
-    * pinned cpusets (taskset) so local[N] cannot borrow idle cores for
-      GC/Python workers — a real N-executor cluster has none to borrow;
-    * interleaved A/B rounds with fresh JVMs, median of `rounds`, to
-      cancel the shared VM's throughput drift;
-    * RAM-backed scratch + sink (/dev/shm) standing in for per-node
-      local disks (one shared spindle otherwise serializes all configs);
-    * an embarrassingly-parallel pure-Python calibration of the SAME
-      core counts — the machine's attainable ceiling for any
-      thread-scaling comparison (frequency + shared memory bandwidth).
-    """
-    cores_needed = sorted({c for p in pairs for c in p})
-    times: dict[int, list[float]] = {c: [] for c in cores_needed}
-    for _ in range(rounds):
-        for cores in cores_needed:
-            times[cores].append(_one_scaling_run(cores, n_turns))
-
-    out: dict = {}
-    for cores in cores_needed:
-        secs = sorted(times[cores])
-        med = secs[len(secs) // 2]
-        out[f"local[{cores}]"] = {
-            "runs_sec": [round(s, 1) for s in secs],
-            "median_sec": round(med, 1),
-            "turns_per_sec": round(n_turns / med, 1),
-        }
-    for lo, hi in pairs:
-        eff = out[f"local[{hi}]"]["turns_per_sec"] / (
-            (hi / lo) * out[f"local[{lo}]"]["turns_per_sec"]
-        )
-        out[f"scaling_efficiency_{lo}_to_{hi}"] = round(eff, 3)
-    out["platform_ceiling"] = _platform_ceiling(cores_needed)
-    out["membw_ceiling"] = _membw_ceiling(cores_needed)
-    return out
-
-
-def scaling_runs_multijvm(n_turns: int, rounds: int = 3, exec_cores: int = 8) -> dict:
-    """The faithful N→4N *executor* proxy: 1 vs 4 concurrent executor
-    JVMs, each pinned to a disjoint cpuset, each owning a disjoint
-    hash(conv_id) shard of the input — exactly how a cluster splits work
-    across executors (own heap, own GC, own Python workers; the only
-    still-shared resource is this box's memory bus).
-
-    1-executor run: one local[exec_cores] JVM processes all 4 shards.
-    4-executor run: four JVMs, shard k on cpuset k, wall = max(runs).
-    efficiency = throughput_4 / (4 × throughput_1).
-    """
-    import statistics
-
-    shard_root = _materialize_shards(n_turns, n_shards=4)
-
-    t1: list[float] = []
-    t4: list[float] = []
-    for _ in range(rounds):
-        t1.append(_multijvm_round(shard_root, [list(range(4))], exec_cores)[0])
-        t4.append(max(_multijvm_round(shard_root, [[k] for k in range(4)], exec_cores)))
-
-    med1, med4 = statistics.median(t1), statistics.median(t4)
-    thr1, thr4 = n_turns / med1, n_turns / med4
-    return {
-        "executors_1": {"runs_sec": [round(x, 1) for x in sorted(t1)],
-                        "median_sec": round(med1, 1), "turns_per_sec": round(thr1, 1)},
-        "executors_4": {"runs_sec": [round(x, 1) for x in sorted(t4)],
-                        "median_sec": round(med4, 1), "turns_per_sec": round(thr4, 1)},
-        "scaling_efficiency_1_to_4_executors": round(thr4 / (4 * thr1), 3),
-        "exec_cores": exec_cores,
-        "n_turns": n_turns,
-    }
-
-
-def _materialize_shards(n_turns: int, n_shards: int) -> str:
-    """Split the transcript table (and snapshots) into conv_id-hash
-    shards once, cached — executors read only their own shard."""
-    from fluvio_jolt_spark.sources.transcripts import default_cache_dir, materialize
-
-    root = default_cache_dir() / f"shards_n{n_turns}_k{n_shards}"
-    done = root / "_DONE"
-    if not done.exists():
-        from fluvio_jolt_spark.plans.session import build_session
-
-        tpath, spath = materialize(n_turns)
-        spark = build_session(app_name="fjs-shard", master="local[8]", shuffle_partitions=8)
-        from pyspark.sql import functions as F
-
-        for src, name in ((tpath, "turns"), (spath, "snaps")):
-            df = spark.read.parquet(str(src)).withColumn(
-                "_shard", F.pmod(F.xxhash64("conv_id"), F.lit(n_shards))
-            )
-            df.write.mode("overwrite").partitionBy("_shard").parquet(str(root / name))
-        spark.stop()
-        done.touch()
-    return str(root)
-
-
-def _multijvm_round(shard_root: str, groups: list[list[int]], exec_cores: int) -> list[float]:
-    """Launch one JVM per group (concurrently), each processing the
-    given shard ids; returns elapsed seconds per JVM."""
-    import shutil
-
-    procs = []
-    for i, shards in enumerate(groups):
-        cpus = f"{i * exec_cores}-{(i + 1) * exec_cores - 1}"
-        sel = ",".join(str(s) for s in shards)
-        code = f"""
-import sys, time, shutil
-sys.path.insert(0, {str(REPO)!r})
-from fluvio_jolt_spark.plans.session import build_session
-from pyspark.sql import functions as F
-import bench
-spark = build_session(app_name="fjs-exec{i}", master="local[{exec_cores}]",
-                      shuffle_partitions={exec_cores},
-                      extra_conf={{"spark.local.dir": "/dev/shm/fjs-mj/local{i}"}})
-turns = spark.read.parquet({shard_root!r} + "/turns").where("_shard in ({sel})").drop("_shard")
-snaps = spark.read.parquet({shard_root!r} + "/snaps").where("_shard in ({sel})").drop("_shard")
-# ingest-time table metadata + warm-up on a slice of the same shards
-from fluvio_jolt_spark.operators.encoding import distinct_values
-roles = distinct_values(turns, "role")
-max_conv = turns.groupBy("conv_id").count().agg(F.max("count")).collect()[0][0]
-bench.run_flagship_frames(spark, turns.limit(50_000), snaps, "/dev/shm/fjs-mj/warm{i}",
-                          roles=roles, max_conv=max_conv)
-shutil.rmtree("/dev/shm/fjs-mj/warm{i}", ignore_errors=True)
-t0 = time.perf_counter()
-bench.run_flagship_frames(spark, turns, snaps, "/dev/shm/fjs-mj/out{i}",
-                          roles=roles, max_conv=max_conv)
-print("ELAPSED", time.perf_counter() - t0)
-shutil.rmtree("/dev/shm/fjs-mj/out{i}", ignore_errors=True)
-spark.stop()
-"""
-        cmd = ["taskset", "-c", cpus, sys.executable, "-c", code]
-        procs.append(subprocess.Popen(cmd, stdout=subprocess.PIPE, stderr=subprocess.PIPE,
-                                      text=True, cwd=str(REPO)))
-    times = []
-    for p in procs:
-        out, err = p.communicate()
-        got = None
-        for line in out.splitlines():
-            if line.startswith("ELAPSED"):
-                got = float(line.split()[1])
-        if got is None:
-            raise RuntimeError(f"executor failed:\n{out}\n{err[-1500:]}")
-        times.append(got)
-    shutil.rmtree("/dev/shm/fjs-mj", ignore_errors=True)
-    return times
 
 
 def run_flagship_frames(
@@ -622,8 +450,7 @@ def build_flagship_frame(
     spark, turns, snaps, chunk_rows: int = 8192,
     roles: "list[str] | None" = None, max_conv: "int | None" = None,
 ):
-    """run_flagship body over pre-loaded DataFrames (shared by the
-    single-process and multi-JVM benches).
+    """The flagship job over pre-loaded DataFrames.
 
     Shuffle-byte-reduced plan (r3, operators.encoding): the feature
     stage — the bandwidth-bound shuffles — runs over an ENCODED narrow
@@ -657,7 +484,7 @@ def build_flagship_frame(
     # Table statistics: the role dictionary and the worst-case
     # conversation length are ingest-time table metadata in a real
     # deployment (computed once, stored in the catalog) — callers that
-    # run the flagship repeatedly (bench/scaling) pass them in; a
+    # run the flagship repeatedly (the bench) pass them in; a
     # one-shot caller lets this compute them (one pruned scan each).
     if roles is None:
         roles = distinct_values(turns, "role")
@@ -719,50 +546,12 @@ def build_flagship_frame(
     return out
 
 
-def _platform_ceiling(cores_list) -> dict:
-    """Measured thread-scaling ceiling of this box: N independent
-    processes running the pure jolt kernel (zero Spark, zero sharing)."""
-    import multiprocessing as mp
-
-    def work(n: int) -> None:
-        sys.path.insert(0, str(REPO))
-        from fluvio_jolt_spark.jolt.transform import transform_json
-        from fluvio_jolt_spark.operators.reshape import reference_bench_spec
-
-        spec = reference_bench_spec()
-        rec = (
-            '{"_id":"x","isActive":true,"balance":"$1.00","age":32,"eyeColor":"g",'
-            '"name":"A B","gender":"m","company":"C","email":"e@x","phone":"1",'
-            '"friends":[{"id":0,"name":"N"}],"favoriteFruit":"k"}'
-        )
-        for _ in range(n):
-            transform_json(rec, spec)
-
-    res = {}
-    per_proc = 150_000
-    for procs in cores_list:
-        ps = [mp.Process(target=work, args=(per_proc,)) for _ in range(procs)]
-        t0 = time.perf_counter()
-        for p in ps:
-            p.start()
-        for p in ps:
-            p.join()
-        dt = time.perf_counter() - t0
-        res[procs] = round(procs * per_proc / dt, 1)
-    out = {f"procs_{k}_recs_per_sec": v for k, v in res.items()}
-    ks = sorted(res)
-    for lo, hi in zip(ks, ks[1:]):
-        out[f"ceiling_eff_{lo}_to_{hi}"] = round(res[hi] / ((hi / lo) * res[lo]), 3)
-    return out
-
-
 def _membw_ceiling(cores_list) -> dict:
     """Measured DRAM-STREAMING ceiling: N independent processes each
     sweeping a buffer far larger than L3 (numpy copy+sum — pure memory
-    traffic, no Python-loop CPU). The pure-Python `_platform_ceiling`
-    is cache-resident and shows the box's CPU scaling; THIS one shows
-    how much memory bandwidth extra cores actually get — the binding
-    resource for shuffle/sort/encode stages. A pipeline whose
+    traffic, no Python-loop CPU). It shows how much memory bandwidth
+    extra cores actually get — the binding resource for
+    shuffle/sort/encode stages. A pipeline whose
     bandwidth-bound stages match this ceiling is scaling perfectly in
     the per-node-resource sense (a real cluster adds DRAM channels
     with every node; one box does not)."""
@@ -799,57 +588,6 @@ def _membw_ceiling(cores_list) -> dict:
     for lo, hi in zip(ks, ks[1:]):
         out[f"membw_eff_{lo}_to_{hi}"] = round(res[hi] / ((hi / lo) * res[lo]), 3)
     return out
-
-
-def _one_scaling_run(cores: int, n_turns: int) -> float:
-    import shutil
-
-    scratch = "/dev/shm/fjs-scale" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
-    os.makedirs(scratch, exist_ok=True)
-    code = f"""
-import sys, time, shutil
-sys.path.insert(0, {str(REPO)!r})
-from fluvio_jolt_spark.plans.session import build_session
-from fluvio_jolt_spark.sources.transcripts import read_transcripts
-import bench
-spark = build_session(app_name="fjs-scale", master="local[{cores}]",
-                      shuffle_partitions={2 * cores},
-                      extra_conf={{"spark.local.dir": {scratch!r} + "/local"}})
-# Warm-up is ONE FULL-SIZE run of the identical job: page cache, full
-# Python-worker pool, and — critically — the same AQE decisions and
-# whole-stage-codegen units as the timed run (a sliced warm-up
-# compiles a DIFFERENT plan via GlobalLimit, so the timed run would
-# still pay full-size codegen: measured ~2 s at 8 cores). The timed
-# region then measures steady-state throughput — what a long-running
-# cluster job delivers — not per-JVM one-time costs.
-turns, snaps = read_transcripts(spark, n_turns={n_turns})
-# ingest-time table metadata, computed once outside the timed region
-from pyspark.sql import functions as F
-from fluvio_jolt_spark.operators.encoding import distinct_values
-roles = distinct_values(turns, "role")
-max_conv = turns.groupBy("conv_id").count().agg(F.max("count")).collect()[0][0]
-bench.run_flagship_frames(spark, turns, snaps, {scratch!r} + "/warm",
-                          roles=roles, max_conv=max_conv)
-shutil.rmtree({scratch!r} + "/warm", ignore_errors=True)
-t0 = time.perf_counter()
-bench.run_flagship_frames(spark, turns, snaps, {scratch!r} + "/out",
-                          roles=roles, max_conv=max_conv)
-print("ELAPSED", time.perf_counter() - t0)
-shutil.rmtree({scratch!r} + "/out", ignore_errors=True)
-spark.stop()
-"""
-    cmd = [sys.executable, "-c", code]
-    if shutil.which("taskset"):
-        cmd = ["taskset", "-c", f"0-{cores - 1}"] + cmd
-    proc = subprocess.run(cmd, capture_output=True, text=True, cwd=str(REPO))
-    try:
-        shutil.rmtree(scratch + "/local", ignore_errors=True)
-    except OSError:
-        pass
-    for line in proc.stdout.splitlines():
-        if line.startswith("ELAPSED"):
-            return float(line.split()[1])
-    raise RuntimeError(f"scaling run failed:\n{proc.stdout}\n{proc.stderr}")
 
 
 if __name__ == "__main__":

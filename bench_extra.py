@@ -6,7 +6,8 @@ bench.py's session and warm-up so numbers are comparable:
   python bench_extra.py --queries span_dup_stats doc_novelty --runs 3 \
       --plans plans/r06 --suffix before
 
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
+Env: SPARK_GRAFT_SF_DIR (the input tables; default in SF_DIR below),
+SPARK_GRAFT_CPUS (default: the machine's core count).
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ REPO = Path(__file__).resolve().parent
 sys.path.insert(0, str(REPO))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
 def _median_run(fn, runs: int = 3) -> tuple[float, list[float]]:

@@ -14,7 +14,7 @@ and snapshots are written as conv_id-bucketed managed tables, then the
 WHOLE pipeline executes with ZERO shuffle exchanges — the bucketed scan
 satisfies the window stage's clustering, the as-of is the co-located
 join-verify variant, the payload join is bucket-co-located, and the
-row-local jolt reshape runs LAST (mapInPandas drops partitioning info,
+row-local jolt reshape runs LAST (mapInArrow drops partitioning info,
 so putting it after the joins keeps every join exchange-free). The
 report JSON includes the counted "exchanges" so callers (and the job
 test) can assert the zero-shuffle property.
@@ -204,7 +204,7 @@ def _run_bucketed(spark, turns, snaps, spec_json: str, args) -> dict:
     straight off the bucketed scans (clustering satisfied, no
     exchange); the payload text is joined while both sides still carry
     the bucket partitioning; the row-local jolt reshape runs last
-    because mapInPandas re-creates output attributes and thereby drops
+    because mapInArrow re-creates output attributes and thereby drops
     partitioning information — downstream of all joins that is free.
     """
     import re

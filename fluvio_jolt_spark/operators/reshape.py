@@ -8,9 +8,10 @@ Design (SURVEY.md §3 "Our Spark lifecycle"):
   (jolt.compiler.compile_spec_cached) — the Python analogue of the
   SmartModule's OnceCell init.
 * Records cross the JVM→Python boundary in Arrow batches
-  (``mapInPandas``); the per-record tree walk happens inside the batch
+  (``mapInArrow``); the per-record tree walk happens inside the batch
   in the C-accelerated json/dict layer — no per-row Spark-level Python
-  UDF dispatch.
+  UDF dispatch. Passthrough columns ride through as untouched Arrow
+  buffers; only the processed JSON columns become Python strings.
 * A failed record never kills the job: its error lands in a dead-letter
   column (``<col>_error``) and the output column is null, deviating
   deliberately from the reference's fail-record semantics at the
@@ -24,9 +25,6 @@ Design (SURVEY.md §3 "Our Spark lifecycle"):
 from __future__ import annotations
 
 import json
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -34,10 +32,11 @@ from pyspark.sql import types as T
 def jolt_transform_values(values, spec_json: str, on_error: str = "null") -> tuple:
     """Apply a compiled Jolt spec to an iterable of JSON strings.
 
-    Returns (out: list[str|None], err: list[str|None]) — the engine-
-    agnostic core shared by the Arrow and pandas batch paths. Import of
-    the jolt package happens lazily so the worker only pays for it
-    once; the spec compile is memoized per executor.
+    Returns (out: list[str|None], err: list[str|None]) — the core of
+    the Arrow batch path and the pure-Python reference the Spark stage
+    is tested against. Import of the jolt package happens lazily so the
+    worker only pays for it once; the spec compile is memoized per
+    executor.
     """
     from fluvio_jolt_spark.jolt.compiler import compile_spec_cached
     from fluvio_jolt_spark.jolt.transform import _orjson, dumps_canonical, transform
@@ -62,23 +61,12 @@ def jolt_transform_values(values, spec_json: str, on_error: str = "null") -> tup
     return out, errs
 
 
-def jolt_transform_series(values: "pd.Series", spec_json: str, on_error: str = "null") -> tuple:
-    """Apply a compiled Jolt spec to a pandas Series of JSON strings.
-
-    Returns (out: pd.Series[str|None], err: pd.Series[str|None]).
-    Thin pandas wrapper over ``jolt_transform_values``.
-    """
-    out, errs = jolt_transform_values(values, spec_json, on_error)
-    return pd.Series(out, dtype=object), pd.Series(errs, dtype=object)
-
-
 def jolt_reshape(
     df: DataFrame,
     spec_json: str,
     columns: list[str] | str = "text",
     on_error: str = "null",
     suffix: str = "_reshaped",
-    engine: str = "arrow",
 ) -> DataFrame:
     """Reshape one or more JSON-string columns through a Jolt spec.
 
@@ -90,21 +78,12 @@ def jolt_reshape(
     unsplittable file), ``fan_out`` repartitions it first so the
     per-record Python kernel uses every worker instead of one (guide
     §2.5 input-skew repair; a no-op on healthy inputs and streams).
-
-    ``engine="arrow"`` (default) runs via ``mapInArrow``: passthrough
-    columns ride through as untouched Arrow buffers — only the
-    processed JSON columns are materialized as Python strings. The
-    ``"pandas"`` engine (``mapInPandas``) additionally round-trips
-    every passthrough column through pandas object arrays; it is kept
-    as the reference path for the byte-parity test.
     """
     if isinstance(columns, str):
         columns = [columns]
     for c in columns:
         if c not in df.columns:
             raise ValueError(f"column {c!r} not in DataFrame ({df.columns})")
-    if engine not in ("arrow", "pandas"):
-        raise ValueError(f"engine must be 'arrow' or 'pandas', got {engine!r}")
     # validate the spec on the driver so bad specs fail fast, not per-task
     from fluvio_jolt_spark.jolt.compiler import TransformSpec
 
@@ -120,35 +99,24 @@ def jolt_reshape(
         out_fields.append(T.StructField(c + "_error", T.StringType(), True))
     out_schema = T.StructType(out_fields)
 
-    if engine == "arrow":
-        def reshape_arrow(batches):
-            import pyarrow as pa
+    def reshape_arrow(batches):
+        import pyarrow as pa
 
-            for batch in batches:
-                if batch.num_rows == 0:
-                    continue
-                names = list(batch.schema.names)
-                arrays = list(batch.columns)
-                for c in columns:
-                    vals = batch.column(names.index(c)).to_pylist()
-                    out, errs = jolt_transform_values(vals, spec_json, on_error)
-                    arrays.append(pa.array(out, type=pa.string()))
-                    arrays.append(pa.array(errs, type=pa.string()))
-                    names.append(c + suffix)
-                    names.append(c + "_error")
-                yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-        return df.mapInArrow(reshape_arrow, schema=out_schema)
-
-    def reshape_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            names = list(batch.schema.names)
+            arrays = list(batch.columns)
             for c in columns:
-                out, errs = jolt_transform_series(pdf[c], spec_json, on_error)
-                pdf[c + suffix] = out
-                pdf[c + "_error"] = errs
-            yield pdf
+                vals = batch.column(names.index(c)).to_pylist()
+                out, errs = jolt_transform_values(vals, spec_json, on_error)
+                arrays.append(pa.array(out, type=pa.string()))
+                arrays.append(pa.array(errs, type=pa.string()))
+                names.append(c + suffix)
+                names.append(c + "_error")
+            yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-    return df.mapInPandas(reshape_batches, schema=out_schema)
+    return df.mapInArrow(reshape_arrow, schema=out_schema)
 
 
 def reference_bench_spec() -> str:

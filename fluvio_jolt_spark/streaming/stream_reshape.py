@@ -3,7 +3,7 @@
 The reference's streaming form is a per-record SmartModule map over a
 Fluvio topic (smartmodule/src/lib.rs:35-44). The Spark-native
 equivalent: ``readStream`` (file/Kafka source) → the SAME
-``jolt_reshape`` stage (mapInArrow/mapInPandas work unchanged on
+``jolt_reshape`` stage (mapInArrow works unchanged on
 streaming DataFrames; the spec compiles once per executor and is
 reused across micro-batches) → windowed aggregations with watermarks for late data →
 ``writeStream`` sink.

@@ -11,15 +11,21 @@ from fluvio_jolt_spark.operators.reshape import jolt_reshape, reference_bench_sp
 
 
 def test_reshape_matches_pure_python(spark, transcripts_small):
+    """Record-by-record parity with the pure-Python engine; input columns
+    pass through byte-equal, and the output columns are the input
+    columns followed by ``text_reshaped``, ``text_error``."""
     from fluvio_jolt_spark.jolt import transform, dumps_canonical
 
     df, _ = transcripts_small
     spec = reference_bench_spec()
-    sample = df.limit(200)
-    out = jolt_reshape(sample, spec, columns="text").select("text", "text_reshaped", "text_error")
+    out = jolt_reshape(df.limit(200), spec, columns="text")
+    n_in = len(df.columns)
+    assert out.columns == df.columns + ["text_reshaped", "text_error"]
+    inputs = {(r.conv_id, r.turn_idx): tuple(r) for r in df.collect()}
     rows = out.collect()
     assert rows, "no rows back from reshape"
     for r in rows:
+        assert tuple(r)[:n_in] == inputs[(r.conv_id, r.turn_idx)]
         assert r.text_error is None
         expected = dumps_canonical(transform(json.loads(r.text), json.loads(spec)))
         assert r.text_reshaped == expected
@@ -50,42 +56,6 @@ def test_reshape_output_content(spark):
     }
     # key order is part of the contract
     assert list(got.keys()) == ["balance", "personal_details", "contacts", "account_type"]
-
-
-def test_reshape_arrow_pandas_engine_parity(spark, transcripts_small):
-    """The mapInArrow production path and the mapInPandas reference
-    path must agree byte-for-byte (values, nulls, dead letters, and
-    column order) on the same input."""
-    df, _ = transcripts_small
-    spec = reference_bench_spec()
-    sample = df.limit(300)
-    arrow = jolt_reshape(sample, spec, columns="text", engine="arrow")
-    pandas = jolt_reshape(sample, spec, columns="text", engine="pandas")
-    assert arrow.columns == pandas.columns
-    key = [c for c in ("conv_id", "turn_idx") if c in arrow.columns] or ["text"]
-    a_rows = [tuple(r) for r in arrow.orderBy(*key).collect()]
-    p_rows = [tuple(r) for r in pandas.orderBy(*key).collect()]
-    assert a_rows == p_rows
-
-
-def test_reshape_arrow_engine_dead_letter_and_nulls(spark):
-    spec = json.dumps([{"operation": "shift", "spec": {"a": {"@(1,missing)": "out"}}}])
-    df = spark.createDataFrame(
-        [('{"a": {"b": 1}}',), ("not json at all",), ('{"ok": 1}',), (None,)],
-        "text string",
-    )
-    rows = jolt_reshape(df, spec, engine="arrow").collect()
-    by_text = {r.text: r for r in rows}
-    assert "KeyNotFound" in by_text['{"a": {"b": 1}}'].text_error
-    assert by_text['{"a": {"b": 1}}'].text_reshaped is None
-    assert by_text['{"ok": 1}'].text_error is None
-    assert by_text[None].text_reshaped is None and by_text[None].text_error is None
-
-
-def test_reshape_bad_engine_rejected(spark):
-    df = spark.createDataFrame([('{"a":1}',)], "text string")
-    with pytest.raises(ValueError, match="engine"):
-        jolt_reshape(df, json.dumps([{"operation": "default", "spec": {"x": 1}}]), engine="nope")
 
 
 def test_reshape_dead_letter(spark):
@@ -120,7 +90,7 @@ def test_reshape_invalid_spec_fails_on_driver(spark):
 
 def test_all_golden_fixtures_through_spark_stage(spark):
     """Every reference golden fixture replayed through the actual
-    mapInPandas stage (SURVEY §5 test plan item (b)); tree equality like
+    mapInArrow stage (SURVEY §5 test plan item (b)); tree equality like
     the reference's own assertion. One Spark job per distinct spec."""
     from jolt_fixtures import iter_fixtures, reference_available
 
