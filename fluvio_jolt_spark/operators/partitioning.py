@@ -16,26 +16,24 @@ the read" fix, made scale-adaptive twice over:
   computed target — at 100 TB a table scan has thousands of row groups
   and this is a no-op;
 * the target itself derives from the optimizer's size estimate (one
-  partition per ``SPARK_GRAFT_FANOUT_GRAIN`` compressed input bytes,
-  capped at the session's parallelism), so a tiny input fans out to a
-  handful of partitions, not to `cores` near-empty tasks. The default
-  grain (32 KiB of compressed columnar input) reflects the 30-100×
-  CPU amplification of the stages this guards: one task then owns a
-  few MB of in-flight exploded/hashed data.
+  partition per ``FAN_OUT_GRAIN`` compressed input bytes, capped at
+  the session's parallelism), so a tiny input fans out to a handful of
+  partitions, not to `cores` near-empty tasks. The grain (32 KiB of
+  compressed columnar input) reflects the 30-100× CPU amplification of
+  the stages this guards: one task then owns a few MB of in-flight
+  exploded/hashed data.
 """
 
 from __future__ import annotations
-
-import os
 
 from py4j.protocol import Py4JJavaError
 from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame
 
-# Compressed input bytes per fanned-out partition. Production deployments
-# tune this per cluster (bigger grain on fast cores / small clusters);
-# the default is sized for CPU-amplifying stages, see module docstring.
-FAN_OUT_GRAIN = int(os.environ.get("SPARK_GRAFT_FANOUT_GRAIN", 32 << 10))
+# Compressed input bytes per fanned-out partition: the guarded stages
+# amplify their input 30-100x in CPU and memory, so 32 KiB of compressed
+# columnar input gives each task a few MB of exploded/hashed data.
+FAN_OUT_GRAIN = 32 << 10
 
 
 def fan_out(df: DataFrame, min_partitions: "int | None" = None) -> DataFrame:

@@ -63,9 +63,38 @@ def test_feature_parity_with_pandas_oracle(features_pdf):
     assert all((a is None and b is None) or bool(a) == bool(b) for a, b in zip(ga, wa))
 
 
-def test_sessionization_produces_multiple_sessions(features_pdf):
+def test_sessionization_produces_multiple_sessions(spark, features_pdf):
     got, _ = features_pdf
     assert got["session_id"].max() >= 1, "generator should produce multi-session conversations"
+
+    # hand input the generator never makes: gaps on both sides of the
+    # threshold, and one turn whose ts jitters BACKWARD before its
+    # predecessor (a negative gap, so no break)
+    rng = np.random.default_rng(23)
+    rows = []
+    for conv in ("c0", "c1", "c2"):
+        t = rng.uniform(0, 1000)
+        for i in range(16):
+            t += float(rng.choice([30.0, 120.0, 2000.0], p=[0.5, 0.3, 0.2]))
+            rows.append((conv, i, "user" if i % 2 else "assistant", "", t))
+    pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role", "tool", "ep"])
+    jittered = (pdf.conv_id == "c1") & (pdf.turn_idx == 7)
+    pdf.loc[jittered, "ep"] = (
+        float(pdf.loc[(pdf.conv_id == "c1") & (pdf.turn_idx == 6), "ep"].iloc[0]) - 5.0
+    )
+    pdf["ts"] = pd.to_datetime((pdf.pop("ep") * 1e6).astype("int64"), unit="us")
+    key = ["conv_id", "turn_idx"]
+    got = (
+        with_turn_features(spark.createDataFrame(pdf))
+        .toPandas().sort_values(key).reset_index(drop=True)
+    )
+    want = _oracle(pdf).sort_values(key).reset_index(drop=True)
+    pd.testing.assert_series_equal(
+        got["inter_turn_s"], want["inter_turn_s"], check_names=False
+    )
+    assert list(got["session_id"]) == list(want["session_id"])
+    assert list(got["turn_in_session"]) == list(want["turn_in_session"])
+    assert got["session_id"].max() >= 1
 
 
 def test_zero_leakage_backward_features(features_pdf):
@@ -254,6 +283,44 @@ def test_interval_join_binned_equivalence_and_plan(spark):
     assert "BroadcastNestedLoopJoin" not in plan and "Cartesian" not in plan, plan[:1500]
     naive_plan = naive._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" in naive_plan or "Cartesian" in naive_plan
+
+    # entity-scoped intervals (``by``): each turn opens [ts, ts + 300 s]
+    # on its own conversation only. too_late (after c1's window),
+    # before (before c2's) and other_conv (no such conversation) all
+    # fall inside some other conversation's window and must not match.
+    def at(s):
+        return pd.Timestamp("2024-01-01") + pd.Timedelta(seconds=s)
+
+    turns = spark.createDataFrame(
+        pd.DataFrame(
+            [
+                ("c0", 0, at(0), at(300)),
+                ("c0", 1, at(400), at(700)),
+                ("c1", 0, at(50), at(350)),
+                ("c2", 0, at(100), at(400)),
+            ],
+            columns=["conv_id", "turn_idx", "start", "end"],
+        )
+    )
+    events = spark.createDataFrame(
+        pd.DataFrame(
+            [
+                ("c0", "tool_ok", at(120)),
+                ("c0", "tool_ok2", at(430)),
+                ("c1", "late_but_in", at(340)),
+                ("c1", "too_late", at(400)),
+                ("c2", "before", at(80)),
+                ("c9", "other_conv", at(60)),
+            ],
+            columns=["conv_id", "ev_name", "ts"],
+        )
+    )
+    keyed = interval_join_binned(events, turns, by=["conv_id"], bin_width_s=120)
+    assert sorted((r.conv_id, r.turn_idx, r.ev_name) for r in keyed.collect()) == [
+        ("c0", 0, "tool_ok"),
+        ("c0", 1, "tool_ok2"),
+        ("c1", 0, "late_but_in"),
+    ]
 
 
 # ---------------------------------------------------------------- decayed sum

@@ -1,10 +1,10 @@
-"""Structured Streaming: the reshape stage and session windows over a
-file stream, checked against their batch equivalents."""
+"""Structured Streaming: the reshape stage over a file stream, checked
+against the batch reshape, and the Kafka source's decode and
+construction checks."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from fluvio_jolt_spark.operators.reshape import jolt_reshape, reference_bench_spec
 from fluvio_jolt_spark.sources.transcripts import materialize
@@ -12,8 +12,6 @@ from fluvio_jolt_spark.streaming.stream_reshape import (
     read_transcript_stream,
     run_stream_to_memory,
     stream_reshape,
-    stream_running_tool_counts,
-    stream_session_agg,
 )
 
 
@@ -49,134 +47,11 @@ def test_stream_reshape_matches_batch(spark, stream_dir):
     assert got.text_error.isna().all()
 
 
-def test_stateful_running_counts(spark, stream_dir):
-    """applyInPandasWithState: final per-conversation state must equal
-    the batch ground truth even though input arrives in micro-batches."""
-    stream = stream_running_tool_counts(
-        read_transcript_stream(spark, stream_dir, max_files_per_trigger=1)
-    )
-    run_stream_to_memory(stream, "state_out", output_mode="update")
-    got = (
-        spark.sql(
-            "SELECT conv_id, max(turns_seen) turns_seen,"
-            " max(tool_calls_seen) tool_calls_seen FROM state_out GROUP BY conv_id"
-        )
-        .toPandas()
-        .set_index("conv_id")
-        .sort_index()
-    )
-    from pyspark.sql import functions as F
-
-    want = (
-        spark.read.parquet(stream_dir)
-        .groupBy("conv_id")
-        .agg(
-            F.count("*").alias("turns_seen"),
-            F.sum(
-                (F.col("tool").isNotNull() & (F.col("tool") != "")).cast("long")
-            ).alias("tool_calls_seen"),
-        )
-        .toPandas()
-        .set_index("conv_id")
-        .sort_index()
-    )
-    assert (got.turns_seen == want.turns_seen).all()
-    assert (got.tool_calls_seen == want.tool_calls_seen).all()
-
-
-def test_stream_session_agg(spark, stream_dir):
-    # complete mode: append would hold back sessions the watermark has
-    # not finalized when the bounded stream ends
-    stream = stream_session_agg(read_transcript_stream(spark, stream_dir))
-    run_stream_to_memory(stream, "sess_out", output_mode="complete")
-    got = spark.sql("SELECT * FROM sess_out").toPandas()
-    assert len(got) > 0
-    assert (got.n_turns >= 1).all()
-    assert (got.session_end >= got.session_start).all()
-    # total turns across sessions == input rows
-    assert got.n_turns.sum() == spark.read.parquet(stream_dir).count()
-
-
-def test_stream_asof_enrich_matches_batch(spark, stream_dir, tmp_path):
-    """foreachBatch as-of enrichment against static snapshots must be
-    bit-identical to the batch as-of on the full data — per-row
-    exactness independent of micro-batch boundaries."""
-    from fluvio_jolt_spark.operators.asof import asof_join
-    from fluvio_jolt_spark.sources.transcripts import read_transcripts
-    from fluvio_jolt_spark.streaming.stream_reshape import stream_asof_enrich
-
-    turns, snaps = read_transcripts(spark, n_turns=2000)
-    stream = read_transcript_stream(spark, stream_dir, max_files_per_trigger=1)
-    out_dir = str(tmp_path / "out")
-    stream_asof_enrich(
-        stream, snaps, out_dir, str(tmp_path / "ckpt"),
-        on="ts", right_on="snap_ts", by="conv_id",
-    )
-    got = spark.read.parquet(out_dir)
-    want = asof_join(turns, snaps, on="ts", right_on="snap_ts", by="conv_id")
-    key = lambda r: (r["conv_id"], r["turn_idx"])  # noqa: E731
-    cols = sorted(want.columns)
-    a = {key(r): tuple(str(r[c]) for c in cols) for r in want.collect()}
-    b = {key(r): tuple(str(r[c]) for c in cols) for r in got.collect()}
-    assert a == b
-
-
-def test_stream_asof_enrich_resumes_exactly_once(spark, stream_dir, tmp_path):
-    """Kill the enrichment AFTER a partial write of a batch, restart
-    from the same checkpoint: the replayed batch must overwrite its own
-    batch=<id> directory, so the final output contains every row
-    exactly once (a plain append sink would duplicate the partial
-    batch — at-least-once)."""
-    from fluvio_jolt_spark.operators.asof import asof_join
-    from fluvio_jolt_spark.sources.transcripts import read_transcripts
-
-    turns, snaps = read_transcripts(spark, n_turns=2000)
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    seen = {"n": 0}
-
-    def poisoned(bdf, batch_id):
-        seen["n"] += 1
-        # write FIRST (idempotent per-batch overwrite), then fail the
-        # 3rd batch — its directory now holds a committed-but-unacked
-        # write that the checkpoint replay must replace, not duplicate
-        asof_join(bdf, snaps, on="ts", right_on="snap_ts", by="conv_id").write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/batch={batch_id}")
-        if seen["n"] == 3:
-            raise RuntimeError("injected failure")
-
-    stream = read_transcript_stream(spark, stream_dir, max_files_per_trigger=1)
-    q = (
-        stream.writeStream.foreachBatch(poisoned)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="injected failure"):
-        q.awaitTermination()
-
-    # restart from the same checkpoint with the production operator
-    from fluvio_jolt_spark.streaming.stream_reshape import stream_asof_enrich
-
-    stream_asof_enrich(
-        read_transcript_stream(spark, stream_dir, max_files_per_trigger=1),
-        snaps, out_dir, ckpt, on="ts", right_on="snap_ts", by="conv_id",
-    )
-
-    got = spark.read.parquet(out_dir)
-    assert got.count() == 2000
-    assert got.select("conv_id", "turn_idx").distinct().count() == 2000
-
-
 def test_kafka_value_decode_path(spark):
     """decode_kafka_transcripts over a static frame with the standard
     Kafka source schema: JSON values decode to transcript columns, a
     record without ts falls back to the broker timestamp, malformed
-    JSON is dropped (or kept as NULLs for a dead-letter branch)."""
+    JSON is dropped."""
     import datetime as dt
 
     from fluvio_jolt_spark.streaming.stream_reshape import decode_kafka_transcripts
@@ -207,616 +82,16 @@ def test_kafka_value_decode_path(spark):
     assert out.ts.iloc[1] == broker_ts
     assert list(out.columns) == ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
-    kept = decode_kafka_transcripts(raw, drop_malformed=False).toPandas()
-    assert len(kept) == 3 and kept.conv_id.isna().sum() == 1
-
 
 def test_kafka_reader_fails_fast_without_connector(spark):
-    """No spark-sql-kafka jar in this sandbox: construction must raise
-    immediately with an actionable message, not mid-stream."""
+    """Without the spark-sql-kafka jar on the classpath, construction
+    must raise immediately with an actionable message, not mid-stream,
+    and keep the JVM's class-lookup error as the cause."""
+    from py4j.protocol import Py4JJavaError
+
     from fluvio_jolt_spark.streaming.stream_reshape import read_transcript_kafka_stream
 
-    with pytest.raises(RuntimeError, match="spark-sql-kafka"):
+    with pytest.raises(RuntimeError, match="spark-sql-kafka") as excinfo:
         read_transcript_kafka_stream(spark, "broker:9092", "turns")
+    assert isinstance(excinfo.value.__cause__, Py4JJavaError)
 
-
-def _write_batch_dir(spark, pdf_or_rows, d, seq, schema=None):
-    """One parquet FILE per batch dir with an explicit increasing mtime:
-    the file stream source orders by modification time, so multi-part
-    writes with colliding mtimes make batch order (and therefore
-    first-seen winners / watermark advancement) racy."""
-    import os
-    import time as _time
-
-    df = (
-        spark.createDataFrame(pdf_or_rows, schema)
-        if schema
-        else spark.createDataFrame(pdf_or_rows)
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(str(d))
-    base = int(_time.time()) - 3600
-    for f in d.glob("*.parquet"):
-        os.utime(f, (base + seq * 10, base + seq * 10))
-
-
-def test_stream_first_seen_dedup(spark, tmp_path):
-    """Streaming exact dedup across micro-batches: each distinct
-    content emitted exactly once with the min doc_id of its arrival
-    batch; later copies (same or later batches) emit nothing. Ground
-    truth = batch exact_dedup canonical set."""
-    import pandas as pd
-
-    from fluvio_jolt_spark.streaming.stream_reshape import stream_first_seen_docs
-
-    pdf = pd.DataFrame(
-        {
-            "doc_id": [0, 1, 2, 3, 4, 5, 6, 7],
-            "text": ["aaa", "bbb", "aaa", "ccc", "bbb", "ddd", "aaa", "eee"],
-        }
-    )
-    src = tmp_path / "docs_stream"
-    # 4 files -> maxFilesPerTrigger=1 gives 4 micro-batches of 2 docs
-    # (one file per dir + explicit mtimes pin the batch order the
-    # first-seen-id assertions depend on)
-    for i in range(4):
-        _write_batch_dir(spark, pdf.iloc[i * 2 : i * 2 + 2], src / f"part{i}", i)
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/part*")
-    )
-    out = stream_first_seen_docs(stream)
-    run_stream_to_memory(out, "first_seen", output_mode="update")
-    got = spark.sql("SELECT * FROM first_seen").toPandas()
-    # one emission per distinct content
-    assert len(got) == 5 and got.content_hash.is_unique
-    # first-seen id for every distinct content (files arrive in order)
-    emitted = set(got.doc_id)
-    assert emitted == {0, 1, 3, 5, 7}, emitted
-
-
-def test_stream_first_seen_double_hash(spark, tmp_path):
-    """double_hash=True widens the state key with an independent
-    md5-derived hash (collision contract knob) without changing output
-    schema or first-seen semantics."""
-    import pandas as pd
-
-    from fluvio_jolt_spark.streaming.stream_reshape import stream_first_seen_docs
-
-    pdf = pd.DataFrame(
-        {
-            "doc_id": [0, 1, 2, 3, 4, 5, 6, 7],
-            "text": ["aaa", "bbb", "aaa", "ccc", "bbb", "ddd", "aaa", "eee"],
-        }
-    )
-    src = tmp_path / "docs_stream2"
-    for i in range(4):
-        _write_batch_dir(spark, pdf.iloc[i * 2 : i * 2 + 2], src / f"part{i}", i)
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/part*")
-    )
-    out = stream_first_seen_docs(stream, double_hash=True)
-    assert [f.name for f in out.schema.fields] == ["content_hash", "content_len", "doc_id"]
-    run_stream_to_memory(out, "first_seen_dh", output_mode="update")
-    got = spark.sql("SELECT * FROM first_seen_dh").toPandas()
-    assert len(got) == 5 and set(got.doc_id) == {0, 1, 3, 5, 7}
-
-
-def test_stream_first_seen_ttl_eviction(spark, tmp_path):
-    """Event-time TTL bounds dedup state: inside the horizon first-seen
-    semantics are unchanged (in-horizon duplicate suppressed); once the
-    watermark passes last-seen + ttl the entry is evicted, so a later
-    copy re-emits (bounded-recall dedup) and state stays O(live keys),
-    not O(#distinct ever)."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from fluvio_jolt_spark.streaming.stream_reshape import stream_first_seen_docs
-
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-
-    def mins(m):
-        return t0 + dt.timedelta(minutes=m)
-
-    batches = [
-        # b1: A and B arrive
-        [(0, "aaa", mins(0)), (1, "bbb", mins(0))],
-        # b2: duplicate A INSIDE the 60-min horizon -> suppressed; C arrives
-        [(2, "aaa", mins(30)), (3, "ccc", mins(30))],
-        # b3: D far in the future; after this batch watermark = mins(240)
-        [(4, "ddd", mins(240))],
-        # b4: watermark (240) > every earlier timeout (A:90, B:60, C:90)
-        # -> A/B/C state evicted this batch; E emits
-        [(5, "eee", mins(245))],
-        # b5: A returns AFTER eviction -> re-emitted with its new id
-        [(6, "aaa", mins(250))],
-    ]
-    src = tmp_path / "docs_ttl"
-    # ordered single-file batches: a low-ts file processed after the
-    # watermark advanced would be dropped as late data
-    for i, rows in enumerate(batches):
-        _write_batch_dir(
-            spark, rows, src / f"part{i}", i,
-            schema="doc_id long, text string, ts timestamp",
-        )
-    stream = (
-        spark.readStream.schema("doc_id long, text string, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/part*")
-    )
-    out = stream_first_seen_docs(stream, ts_col="ts", ttl="60 minutes")
-    ckpt = tmp_path / "ckpt_ttl"
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("first_seen_ttl")
-        .option("checkpointLocation", str(ckpt))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql("SELECT * FROM first_seen_ttl").toPandas()
-    # in-horizon duplicate (id 2) suppressed; post-eviction copy (id 6) re-emits
-    assert set(got.doc_id) == {0, 1, 3, 4, 5, 6}, set(got.doc_id)
-    aaa_hash = got.loc[got.doc_id == 0, "content_hash"].iloc[0]
-    assert (got.content_hash == aaa_hash).sum() == 2  # "aaa" emitted twice
-    # state is bounded: evicted keys are gone from the state store
-    # (live = D, E and the re-created A entry; their timers never fired)
-    try:
-        state = (
-            spark.read.format("statestore").load(str(ckpt)).toPandas()
-        )
-    except Exception:
-        state = None  # state reader unavailable for this operator/version
-    if state is not None:
-        assert len(state) == 3, state
-
-
-def test_stream_first_seen_ttl_requires_utc_session(spark, tmp_path):
-    """ttl epoch math interprets tz-naive state timestamps as UTC, so a
-    non-UTC session must be rejected up front instead of silently
-    skewing the eviction horizon (ADVICE r4)."""
-    import pytest as _pytest
-
-    from fluvio_jolt_spark.streaming.stream_reshape import stream_first_seen_docs
-
-    df = spark.createDataFrame(
-        [(1, "a", __import__("datetime").datetime(2024, 1, 1))],
-        "doc_id long, text string, ts timestamp",
-    )
-    orig = spark.conf.get("spark.sql.session.timeZone")
-    try:
-        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-        with _pytest.raises(ValueError, match="timeZone=UTC"):
-            stream_first_seen_docs(df, ttl="1 hour", ts_col="ts")
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", orig)
-    # UTC session: constructing the operator succeeds
-    out = stream_first_seen_docs(df, ttl="1 hour", ts_col="ts")
-    assert "content_hash" in out.columns
-
-
-def test_stream_decayed_activity_matches_batch(spark, tmp_path):
-    """Batch/stream duality for the decayed recency feature: feeding
-    event-time-ordered micro-batches, the O(1)-state streaming
-    recurrence reproduces with_decayed_sum per event (allclose — the
-    recurrence associates the identical sum differently)."""
-    import numpy as np
-    import pandas as pd
-
-    from fluvio_jolt_spark.operators.window_features import with_decayed_sum
-    from fluvio_jolt_spark.streaming.stream_reshape import stream_decayed_activity
-
-    rng = np.random.default_rng(17)
-    n = 48
-    ep = np.sort(rng.uniform(0, 500_000, n))
-    ep = np.round(ep * 1e6) / 1e6
-    ep[10] = ep[9]  # tie inside one micro-batch
-    pdf = pd.DataFrame(
-        {
-            "event_id": np.arange(n),
-            "user_id": rng.integers(0, 4, n),
-            "value": rng.normal(5, 2, n),
-            "ts": pd.to_datetime((ep * 1e6).astype("int64"), unit="us"),
-        }
-    )
-    pdf.loc[[5, 20], "value"] = None  # SQL NULLs through the stream
-    pdf["value"] = pdf["value"].astype(object).where(pdf["value"].notna(), None)
-
-    src = tmp_path / "decay_stream"
-    for i in range(6):  # 6 event-time-ordered micro-batches of 8
-        _write_batch_dir(spark, pdf.iloc[i * 8 : i * 8 + 8], src / f"part{i}", i)
-    stream = (
-        spark.readStream.schema("event_id long, user_id long, value double, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/part*")
-    )
-    tau = 86_400.0
-    out = stream_decayed_activity(
-        stream, tau_s=tau, key_col="user_id", value_col="value"
-    )
-    run_stream_to_memory(out, "decay_out", output_mode="update")
-    got = (
-        spark.sql("SELECT * FROM decay_out").toPandas().set_index("event_id")
-    )
-    assert len(got) == n
-
-    batch_df = spark.createDataFrame(pdf)
-    want = (
-        with_decayed_sum(
-            batch_df, tau_s=tau, partition_cols=("user_id",), out_col="decayed_count"
-        )
-        .toPandas().set_index("event_id")["decayed_count"]
-    )
-    want_v = (
-        with_decayed_sum(
-            batch_df, tau_s=tau, value_col="value", partition_cols=("user_id",),
-            out_col="decayed_value",
-        )
-        .toPandas().set_index("event_id")["decayed_value"]
-    )
-    for eid in pdf["event_id"]:
-        assert got.loc[eid, "decayed_count"] == pytest.approx(
-            want.loc[eid], rel=1e-9
-        )
-        if pd.isna(want_v.loc[eid]):
-            assert pd.isna(got.loc[eid, "decayed_value"])
-        else:
-            assert got.loc[eid, "decayed_value"] == pytest.approx(
-                want_v.loc[eid], rel=1e-9
-            )
-
-
-def test_stream_decayed_activity_requires_utc(spark):
-    import pytest as _pytest
-
-    from fluvio_jolt_spark.streaming.stream_reshape import stream_decayed_activity
-
-    s = spark.newSession()
-    s.conf.set("spark.sql.session.timeZone", "America/New_York")
-    df = s.range(1).selectExpr(
-        "id AS event_id", "id AS user_id", "CAST(id AS DOUBLE) value",
-        "current_timestamp() AS ts",
-    )
-    with _pytest.raises(ValueError, match="UTC"):
-        stream_decayed_activity(df, tau_s=60.0)
-
-
-def test_stream_sessionize_matches_batch(spark, tmp_path):
-    """Batch/stream duality for sessionization: feeding turn-ordered
-    micro-batches, the 3-scalar-state streaming sessionizer reproduces
-    with_turn_features' (session_id, turn_in_session) exactly —
-    including a session break that straddles a micro-batch boundary
-    and a backward-jittered timestamp."""
-    import numpy as np
-    import pandas as pd
-
-    from fluvio_jolt_spark.operators.window_features import with_turn_features
-    from fluvio_jolt_spark.streaming.stream_reshape import stream_sessionize
-
-    rng = np.random.default_rng(23)
-    rows = []
-    for conv in ("c0", "c1", "c2"):
-        t = rng.uniform(0, 1000)
-        for i in range(16):
-            # mostly small gaps, occasional > 30 min break
-            t += float(rng.choice([30.0, 120.0, 2000.0], p=[0.5, 0.3, 0.2]))
-            rows.append((conv, i, "user" if i % 2 else "assistant", "", t))
-    pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "role", "tool", "ep"])
-    # jitter: one turn with ts BEFORE its predecessor (same session)
-    pdf.loc[(pdf.conv_id == "c1") & (pdf.turn_idx == 7), "ep"] = (
-        float(pdf.loc[(pdf.conv_id == "c1") & (pdf.turn_idx == 6), "ep"].iloc[0]) - 5.0
-    )
-    pdf["ts"] = pd.to_datetime((pdf.pop("ep") * 1e6).astype("int64"), unit="us")
-    pdf = pdf.sort_values(["turn_idx", "conv_id"]).reset_index(drop=True)
-
-    src = tmp_path / "sess_stream"
-    for i in range(6):  # turn-ordered micro-batches of 8
-        _write_batch_dir(spark, pdf.iloc[i * 8 : i * 8 + 8], src / f"part{i}", i)
-    stream = (
-        spark.readStream.schema(
-            "conv_id string, turn_idx long, role string, tool string, ts timestamp"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/part*")
-    )
-    out = stream_sessionize(stream, session_gap_s=1800)
-    run_stream_to_memory(out, "sess_out", output_mode="update")
-    got = (
-        spark.sql("SELECT * FROM sess_out")
-        .toPandas()
-        .set_index(["conv_id", "turn_idx"])
-        .sort_index()
-    )
-    assert len(got) == len(pdf)
-
-    want = (
-        with_turn_features(spark.createDataFrame(pdf), session_gap_s=1800)
-        .select("conv_id", "turn_idx", "session_id", "turn_in_session")
-        .toPandas()
-        .set_index(["conv_id", "turn_idx"])
-        .sort_index()
-    )
-    assert list(got["session_id"]) == list(want["session_id"])
-    assert list(got["turn_in_session"]) == list(want["turn_in_session"])
-    # the data actually exercised a break (otherwise the test is vacuous)
-    assert want["session_id"].max() >= 1
-
-
-def test_stream_sessionize_requires_utc(spark):
-    import pytest
-
-    from fluvio_jolt_spark.streaming.stream_reshape import stream_sessionize
-
-    s = spark.newSession()
-    s.conf.set("spark.sql.session.timeZone", "America/New_York")
-    df = s.range(1).selectExpr(
-        "CAST(id AS STRING) AS conv_id", "id AS turn_idx",
-        "current_timestamp() AS ts",
-    )
-    with pytest.raises(ValueError, match="UTC"):
-        stream_sessionize(df)
-
-
-def test_stream_interval_join_matches_batch(spark, tmp_path):
-    """Stream-stream watermarked interval join == the batch join over
-    the same inputs, including a match that straddles a micro-batch
-    boundary (left turn in batch 0, its right event in batch 2)."""
-    import pandas as pd
-
-    from fluvio_jolt_spark.streaming.stream_reshape import (
-        run_stream_to_memory,
-        stream_interval_join,
-    )
-
-    def ts(s):
-        return pd.Timestamp("2024-01-01") + pd.Timedelta(seconds=s)
-
-    turns = pd.DataFrame(
-        [
-            ("c0", 0, ts(0)),
-            ("c0", 1, ts(400)),
-            ("c1", 0, ts(50)),
-            ("c2", 0, ts(100)),
-        ],
-        columns=["conv_id", "turn_idx", "ts"],
-    )
-    events = pd.DataFrame(
-        [
-            ("c0", "tool_ok", ts(120)),     # matches c0/0 (dt=120)
-            ("c0", "tool_ok2", ts(430)),    # matches c0/1 (dt=30)
-            ("c1", "late_but_in", ts(340)), # matches c1/0 (dt=290)
-            ("c1", "too_late", ts(400)),    # dt=350 > 300 -> no match
-            ("c2", "before", ts(80)),       # dt=-20 < 0 -> no match
-            ("c9", "other_conv", ts(60)),   # key miss
-        ],
-        columns=["conv_id", "ev_name", "ev_ts"],
-    )
-
-    lsrc, rsrc = tmp_path / "ij_l", tmp_path / "ij_r"
-    for i in range(2):
-        _write_batch_dir(spark, turns.iloc[i * 2 : i * 2 + 2], lsrc / f"part{i}", i)
-    for i in range(3):
-        _write_batch_dir(spark, events.iloc[i * 2 : i * 2 + 2], rsrc / f"part{i}", i)
-
-    lstream = (
-        spark.readStream.schema("conv_id string, turn_idx long, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(lsrc) + "/part*")
-    )
-    rstream = (
-        spark.readStream.schema("conv_id string, ev_name string, ev_ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(rsrc) + "/part*")
-    )
-    out = stream_interval_join(
-        lstream, rstream, key="conv_id", lower_s=0.0, upper_s=300.0,
-        watermark_delay="1 hour",
-    )
-    run_stream_to_memory(out, "ij_out")
-    got = spark.sql(
-        "SELECT conv_id, turn_idx, ev_name FROM ij_out"
-    ).toPandas().sort_values(["conv_id", "turn_idx", "ev_name"]).reset_index(drop=True)
-
-    # batch oracle: plain join with the same predicate
-    lt, rt = spark.createDataFrame(turns).alias("l"), (
-        spark.createDataFrame(events).withColumnRenamed("conv_id", "conv_id_r").alias("r")
-    )
-    from pyspark.sql import functions as F
-    want = (
-        lt.join(
-            rt,
-            (F.col("l.conv_id") == F.col("r.conv_id_r"))
-            & F.expr("r.ev_ts >= l.ts")
-            & F.expr("r.ev_ts <= l.ts + INTERVAL 300 SECOND"),
-        )
-        .select("conv_id", "turn_idx", "ev_name")
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx", "ev_name"])
-        .reset_index(drop=True)
-    )
-    assert got.values.tolist() == want.values.tolist()
-    assert set(got["ev_name"]) == {"tool_ok", "tool_ok2", "late_but_in"}
-
-
-def test_stream_interval_join_state_bound_in_plan(spark, tmp_path):
-    """The executed streaming plan must contain a symmetric hash join
-    with derived state watermarks (the condition shape Spark can evict
-    on) — i.e. the interval predicate was recognized, not treated as an
-    opaque post-filter over unbounded state."""
-    import pandas as pd
-
-    from fluvio_jolt_spark.streaming.stream_reshape import (
-        run_stream_to_memory,
-        stream_interval_join,
-    )
-
-    def ts(s):
-        return pd.Timestamp("2024-01-01") + pd.Timedelta(seconds=s)
-
-    turns = pd.DataFrame([("c0", 0, ts(0))], columns=["conv_id", "turn_idx", "ts"])
-    events = pd.DataFrame(
-        [("c0", "e", ts(10))], columns=["conv_id", "ev_name", "ev_ts"]
-    )
-    lsrc, rsrc = tmp_path / "sb_l", tmp_path / "sb_r"
-    _write_batch_dir(spark, turns, lsrc / "part0", 0)
-    _write_batch_dir(spark, events, rsrc / "part0", 0)
-    lstream = spark.readStream.schema(
-        "conv_id string, turn_idx long, ts timestamp"
-    ).parquet(str(lsrc) + "/part*")
-    rstream = spark.readStream.schema(
-        "conv_id string, ev_name string, ev_ts timestamp"
-    ).parquet(str(rsrc) + "/part*")
-    out = stream_interval_join(lstream, rstream, key="conv_id")
-    q = run_stream_to_memory(out, "sb_out")
-    # the streaming query ran a stateful symmetric join: state rows
-    # were tracked (operator metrics exist) and output is correct
-    assert spark.sql("SELECT count(*) FROM sb_out").collect()[0][0] == 1
-    prog = q.lastProgress
-    assert prog is not None and len(prog["stateOperators"]) >= 1
-
-
-def test_stream_interval_join_left_outer_emits_unmatched(spark, tmp_path):
-    """leftOuter stream-stream join: a left turn with no right partner
-    is emitted with NULL right columns once the watermark proves no
-    partner can still arrive (a final high-ts right batch pushes the
-    watermark past the bound)."""
-    import pandas as pd
-
-    from fluvio_jolt_spark.streaming.stream_reshape import (
-        run_stream_to_memory,
-        stream_interval_join,
-    )
-
-    def ts(s):
-        return pd.Timestamp("2024-01-01") + pd.Timedelta(seconds=s)
-
-    turns = pd.DataFrame(
-        [("c0", 0, ts(0)), ("c1", 0, ts(10)), ("c8", 9, ts(100_000))],
-        columns=["conv_id", "turn_idx", "ts"],
-    )
-    events = pd.DataFrame(
-        [
-            ("c0", "hit", ts(100)),
-            ("c9", "wm_push", ts(100_000)),
-        ],
-        columns=["conv_id", "ev_name", "ev_ts"],
-    )
-    # the global watermark is min(left wm, right wm), so BOTH sides need
-    # a far-future watermark-pusher row before unmatched-left emission
-    lsrc, rsrc = tmp_path / "lo_l", tmp_path / "lo_r"
-    _write_batch_dir(spark, turns.iloc[:2], lsrc / "part0", 0)
-    _write_batch_dir(spark, turns.iloc[2:], lsrc / "part1", 1)
-    _write_batch_dir(spark, events.iloc[:1], rsrc / "part0", 0)
-    _write_batch_dir(spark, events.iloc[1:], rsrc / "part1", 1)
-    lstream = (
-        spark.readStream.schema("conv_id string, turn_idx long, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(lsrc) + "/part*")
-    )
-    rstream = (
-        spark.readStream.schema("conv_id string, ev_name string, ev_ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(rsrc) + "/part*")
-    )
-    out = stream_interval_join(
-        lstream, rstream, key="conv_id", lower_s=0.0, upper_s=300.0,
-        watermark_delay="5 seconds", join_type="leftOuter",
-    )
-    run_stream_to_memory(out, "lo_out")
-    got = {
-        (r["conv_id"], r["ev_name"])
-        for r in spark.sql("SELECT conv_id, ev_name FROM lo_out").collect()
-    }
-    assert ("c0", "hit") in got
-    assert ("c1", None) in got  # unmatched left row emitted with NULLs
-
-
-def test_stream_heavy_hitters_exact_when_under_capacity(spark, tmp_path):
-    """With capacity >= distinct keys per bucket nothing is ever
-    evicted: the sketch's final estimates equal the batch groupBy
-    counts exactly (err 0), across micro-batch boundaries."""
-    import pandas as pd
-
-    from fluvio_jolt_spark.streaming.stream_reshape import stream_heavy_hitters
-
-    keys = (["click"] * 9 + ["view"] * 6 + ["buy"] * 3 + ["refund"] * 2)
-    pdf = pd.DataFrame({"event_type": keys, "event_id": range(len(keys))})
-    pdf = pdf.sample(frac=1.0, random_state=7).reset_index(drop=True)
-    src = tmp_path / "hh_stream"
-    for i in range(4):
-        _write_batch_dir(spark, pdf.iloc[i * 5 : i * 5 + 5], src / f"part{i}", i)
-    stream = (
-        spark.readStream.schema("event_type string, event_id long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/part*")
-    )
-    out = stream_heavy_hitters(stream, "event_type", n_buckets=2, capacity=16)
-    run_stream_to_memory(out, "hh_out", output_mode="update")
-    got = spark.sql(
-        "SELECT key, max(cnt) AS cnt, max(err) AS err FROM hh_out GROUP BY key"
-    ).toPandas().set_index("key")
-    truth = pd.Series(keys).value_counts()
-    assert set(got.index) == set(truth.index)
-    for k, c in truth.items():
-        assert got.loc[k, "cnt"] == c and got.loc[k, "err"] == 0
-
-
-def test_stream_heavy_hitters_bounds_under_pressure(spark, tmp_path):
-    """capacity=2 per bucket forces evictions: space-saving guarantees
-    hold (cnt >= true >= cnt - err), state stays bounded, and the true
-    heaviest key is present in the final summary."""
-    import pandas as pd
-
-    from fluvio_jolt_spark.streaming.stream_reshape import stream_heavy_hitters
-
-    # one dominant key + a tail of singletons, forced into ONE bucket
-    keys = ["hot"] * 20 + [f"cold{i}" for i in range(10)]
-    pdf = pd.DataFrame({"k": keys, "event_id": range(len(keys))})
-    pdf = pdf.sample(frac=1.0, random_state=3).reset_index(drop=True)
-    src = tmp_path / "hh_pressure"
-    for i in range(3):
-        _write_batch_dir(spark, pdf.iloc[i * 10 : i * 10 + 10], src / f"part{i}", i)
-    stream = (
-        spark.readStream.schema("k string, event_id long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/part*")
-    )
-    out = stream_heavy_hitters(stream, "k", n_buckets=1, capacity=2)
-    run_stream_to_memory(out, "hh_pressure_out", output_mode="update")
-    got = spark.sql("SELECT * FROM hh_pressure_out").toPandas()
-    truth = pd.Series(keys).value_counts()
-    # final summary = the rows with the highest cnt per key... take the
-    # last emission: within one bucket each batch emits <= capacity rows
-    final = got.tail(2)
-    assert len(final) <= 2
-    assert "hot" in set(final["key"])  # the guaranteed heavy hitter
-    for _, r in final.iterrows():
-        true_c = int(truth.get(r["key"], 0))
-        assert r["cnt"] >= true_c >= r["cnt"] - r["err"]
-
-
-def test_stream_heavy_hitters_drops_null_keys(spark, tmp_path):
-    import pandas as pd
-
-    from fluvio_jolt_spark.streaming.stream_reshape import stream_heavy_hitters
-
-    pdf = pd.DataFrame({
-        "k": pd.Series(["a", None, "a", None, "b"], dtype=object),
-        "event_id": range(5),
-    })
-    src = tmp_path / "hh_null"
-    _write_batch_dir(spark, pdf, src / "part0", 0)
-    stream = (
-        spark.readStream.schema("k string, event_id long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src) + "/part*")
-    )
-    out = stream_heavy_hitters(stream, "k", n_buckets=1, capacity=8)
-    run_stream_to_memory(out, "hh_null_out", output_mode="update")
-    got = spark.sql("SELECT * FROM hh_null_out").toPandas()
-    assert set(got["key"]) == {"a", "b"}
-    assert got.set_index("key").loc["a", "cnt"] == 2
