@@ -181,19 +181,29 @@ def _q_rolling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _read(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    purchase_val = F.when(F.col("event_type") == "purchase", F.col("value"))
-    return ev.select(
+def _purchase_backfill(
+    spark: SparkSession, sf_dir: str, direction: str, out_col: str
+) -> DataFrame:
+    """operators.window_features.backfill over each user's purchase
+    values (NULL on every other event), ordered by (ts, event_id)."""
+    from fluvio_jolt_spark.operators.window_features import backfill
+
+    ev = _read(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
-        F.last(purchase_val, ignorenulls=True).over(w).alias("last_purchase_value"),
+        "ts",
+        F.when(F.col("event_type") == "purchase", F.col("value")).alias("pv"),
     )
+    out = backfill(
+        ev, "pv", partition_cols=("user_id",), order_cols=("ts", "event_id"),
+        direction=direction,
+    )
+    return out.select("event_id", "user_id", F.col("pv_filled").alias(out_col))
+
+
+def _q_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Forward fill: last purchase value at-or-before each event."""
+    return _purchase_backfill(spark, sf_dir, "forward", "last_purchase_value")
 
 
 def _q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -279,14 +289,11 @@ def _q_asof_join_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_asof_join_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same as asof_join_signup via the applyInPandas merge_asof variant.
-
-    This is a CHECK-ONLY lane (the window/salted variants are the scale
-    path), so its input is capped to a deterministic ~1/4 user slice —
-    md5(user_id) first hex digit in 0..3, mirrored in the oracle — to
-    keep its correctness row without paying a full-sf pandas cogroup in
-    every bench round (VERDICT r4: 7.8 s of a 74.5 s bench wall)."""
-    from fluvio_jolt_spark.operators.asof import asof_join_pandas
+    """asof_join_signup over a deterministic ~1/4 user slice —
+    md5(user_id) first hex digit in 0..3, mirrored in the oracle. The
+    query id is kept from the retired pandas merge_asof variant; it now
+    runs the shipped union-window asof_join."""
+    from fluvio_jolt_spark.operators.asof import asof_join
 
     ev = _read(spark, sf_dir, "events").filter(
         F.substring(F.md5(F.col("user_id").cast("string")), 1, 1).isin(
@@ -297,7 +304,7 @@ def _q_asof_join_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", F.col("ts").alias("snap_ts"), F.col("value").alias("signup_value")
     )
     left = ev.select("event_id", "user_id", "ts")
-    out = asof_join_pandas(left, signups, on="ts", right_on="snap_ts", by="user_id")
+    out = asof_join(left, signups, on="ts", right_on="snap_ts", by="user_id")
     return out.select("event_id", "user_id", "signup_value")
 
 
@@ -323,7 +330,7 @@ def _q_asof_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_asof_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The join-verify (layout-aware) as-of variant — zero exchanges on
     co-bucketed tables; here over plain parquet, checked against the
-    same DuckDB ASOF JOIN oracle as the other three variants."""
+    same DuckDB ASOF JOIN oracle as the plain and salted variants."""
     from fluvio_jolt_spark.operators.asof import asof_join_bucketed
 
     ev = _read(spark, sf_dir, "events")
@@ -364,18 +371,7 @@ def _q_sessionize_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_backfill_backward(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Backward fill: next purchase value at-or-after each event (future-
     looking by construction — label-side feature, explicitly named)."""
-    ev = _read(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.col("ts").desc(), F.col("event_id").desc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    purchase_val = F.when(F.col("event_type") == "purchase", F.col("value"))
-    return ev.select(
-        "event_id",
-        "user_id",
-        F.last(purchase_val, ignorenulls=True).over(w).alias("next_purchase_value"),
-    )
+    return _purchase_backfill(spark, sf_dir, "backward", "next_purchase_value")
 
 
 def _q_range_frame_10min(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1367,10 +1363,12 @@ def _q_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_exact_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """operators.dedup.exact_dedup: one row per distinct text, at its
+    canonical (minimum) doc_id."""
+    from fluvio_jolt_spark.operators.dedup import exact_dedup
+
     docs = _read(spark, sf_dir, "documents")
-    return docs.groupBy("text").agg(
-        F.min("doc_id").alias("canonical_id"), F.count("*").alias("n_copies")
-    ).select("canonical_id", "n_copies")
+    return exact_dedup(docs).filter("is_canonical").select("canonical_id", "n_copies")
 
 
 def _q_jaccard_adjacent(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1443,22 +1441,15 @@ def _q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """operators.similarity.cosine_topk: the 20 nearest vectors to
+    vec_id 0, ranked on the unrounded similarity."""
+    from fluvio_jolt_spark.operators.similarity import cosine_topk
+
     emb = _read(spark, sf_dir, "embeddings")
     qrow = emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
     q = [float(x) for x in qrow]
-    qlit = F.array(*[F.lit(x) for x in q])
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    dot = F.aggregate(
-        F.zip_with(v, qlit, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    norm_v = F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
-    qnorm = sum(x * x for x in q) ** 0.5
-    sim = dot / (norm_v * F.lit(qnorm))
-    ranked = emb.filter(F.col("vec_id") != 0).select(
-        "vec_id", F.round(sim, 6).alias("cos_sim")
-    )
-    # TakeOrderedAndProject, not a global window
-    return ranked.orderBy(F.col("cos_sim").desc(), F.col("vec_id")).limit(20)
+    top = cosine_topk(emb.filter(F.col("vec_id") != 0), q, k=20)
+    return top.select("vec_id", F.round("cos_sim", 6).alias("cos_sim"))
 
 
 def _q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1892,13 +1883,6 @@ def _q_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SPLIT_FRACTIONS = {"train": 0.8, "val": 0.1, "test": 0.1}
-# cumulative boundaries exactly as hash_split accumulates them (the repr
-# float literals reparse to the identical doubles in any IEEE engine)
-_SPLIT_B: "list[tuple[str, float]]" = []
-_cum = 0.0
-for _name, _frac in list(SPLIT_FRACTIONS.items())[:-1]:
-    _cum += _frac
-    _SPLIT_B.append((_name, _cum))
 
 
 def _q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2690,7 +2674,12 @@ def _image_features_oracle(n: int = 48, real_codecs: bool = False) -> str:
 
 
 def oracle_sql() -> dict[str, str]:
+    from fluvio_jolt_spark.operators.sampling import split_boundaries
+
     gap_us = SESSION_GAP_S * 1_000_000
+    # the boundaries hash_split compares against (the repr float literals
+    # reparse to the identical doubles in any IEEE engine)
+    split_b = split_boundaries(SPLIT_FRACTIONS)
     # NULLS FIRST pins DuckDB's window ordering to Spark's ASC default
     # (Spark: NULLS FIRST; DuckDB: NULLS LAST) — a no-op on the current
     # non-null driver data, but keeps window frames aligned on
@@ -3827,8 +3816,8 @@ def oracle_sql() -> dict[str, str]:
         "split_assign": f"""
           SELECT doc_id,
                  CASE
-                   WHEN u <= {_SPLIT_B[0][1]!r} THEN '{_SPLIT_B[0][0]}'
-                   WHEN u <= {_SPLIT_B[1][1]!r} THEN '{_SPLIT_B[1][0]}'
+                   WHEN u <= {split_b[0][1]!r} THEN '{split_b[0][0]}'
+                   WHEN u <= {split_b[1][1]!r} THEN '{split_b[1][0]}'
                    ELSE 'test'
                  END AS split
           FROM (
@@ -3922,8 +3911,8 @@ def oracle_sql() -> dict[str, str]:
           ), sp AS (
             SELECT text,
                    CASE
-                     WHEN u <= {_SPLIT_B[0][1]!r} THEN '{_SPLIT_B[0][0]}'
-                     WHEN u <= {_SPLIT_B[1][1]!r} THEN '{_SPLIT_B[1][0]}'
+                     WHEN u <= {split_b[0][1]!r} THEN '{split_b[0][0]}'
+                     WHEN u <= {split_b[1][1]!r} THEN '{split_b[1][0]}'
                      ELSE 'test'
                    END AS split
             FROM (

@@ -7,8 +7,8 @@ Layers:
   operators/  Spark operators: vectorized reshape, as-of join, window
               features, sessionization, skew handling, dedup, similarity,
               text analysis, multimodal plumbing
-  sources/    synthetic transcript generator + table readers (parquet now,
-              Iceberg-ready interface)
+  sources/    synthetic transcript generator + table sources (bucketed
+              tables, Iceberg-ready interface)
   plans/      SparkSession building, checkpoint/lineage/metrics
   streaming/  Structured Streaming wiring for the reshape stage
 """

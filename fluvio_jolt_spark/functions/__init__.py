@@ -8,25 +8,4 @@ from ..operators.dedup import content_hash, hamming64, word_shingles  # noqa: F4
 from ..operators.similarity import cosine_sim_col, srp_bucket_col  # noqa: F401
 from ..operators.text_analysis import tokens_col  # noqa: F401
 
-from .epoch import ensure_ltz, ensure_ltz_all, epoch_us  # noqa: F401
-
-from pyspark.sql import functions as F
-
-
-def session_break_col(ts_col, prev_ts_col, gap_s: int):
-    """1 when the inter-event gap exceeds gap_s, else 0.
-
-    Expects TIMESTAMP/LTZ inputs (run ``ensure_ltz`` first when the
-    source may carry naive NTZ timestamps); never casts timestamps to
-    double — illegal on NTZ and lossy in general.
-    """
-    gap_us = F.unix_micros(F.col(ts_col)) - F.unix_micros(F.col(prev_ts_col))
-    return F.when(gap_us > F.lit(int(gap_s) * 1_000_000), 1).otherwise(0)
-
-
-def is_tool_call_col(tool_col: str = "tool"):
-    return (F.col(tool_col).isNotNull() & (F.col(tool_col) != F.lit(""))).cast("int")
-
-
-def epoch_us_col(ts_col: str = "ts"):
-    return F.unix_micros(F.col(ts_col))
+from .epoch import ensure_ltz, ensure_ltz_all  # noqa: F401

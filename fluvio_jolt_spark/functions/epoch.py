@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import TimestampNTZType, TimestampType
+from pyspark.sql.types import TimestampNTZType
 
 
 def ensure_ltz(df: DataFrame, *cols: str) -> DataFrame:
@@ -43,14 +43,3 @@ def ensure_ltz_all(df: DataFrame) -> DataFrame:
     """``ensure_ltz`` over every NTZ column in the frame."""
     ntz = [f.name for f in df.schema.fields if isinstance(f.dataType, TimestampNTZType)]
     return ensure_ltz(df, *ntz)
-
-
-def epoch_us(col) -> "F.Column":
-    """Microseconds since epoch for a TIMESTAMP/LTZ column or name.
-    Callers with possibly-NTZ inputs run ``ensure_ltz`` first."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.unix_micros(c)
-
-
-def is_ltz(df: DataFrame, col: str) -> bool:
-    return isinstance(df.schema[col].dataType, TimestampType)

@@ -131,22 +131,3 @@ def tokens_delete(doc: Any, tokens: list[str]) -> None:
             return
     if isinstance(cur, dict):
         cur.pop(tokens[-1], None)
-
-
-# Raw-token wrappers (apply the RFC6901 round trip first).
-
-
-def pointer_get(doc: Any, raw_tokens: list[str]) -> Any:
-    return tokens_get(doc, _rfc6901_tokens(raw_tokens))
-
-
-def pointer_exists(doc: Any, raw_tokens: list[str]) -> bool:
-    return tokens_get(doc, _rfc6901_tokens(raw_tokens)) is not _ABSENT
-
-
-def pointer_insert(doc: Any, raw_tokens: list[str], value: Any) -> None:
-    tokens_insert(doc, _rfc6901_tokens(raw_tokens), value)
-
-
-def pointer_delete(doc: Any, raw_tokens: list[str]) -> None:
-    tokens_delete(doc, _rfc6901_tokens(raw_tokens))

@@ -1,7 +1,7 @@
 from .reshape import jolt_reshape, reference_bench_spec  # noqa: F401
 from .window_features import backfill, with_turn_features  # noqa: F401
-from .asof import asof_join, asof_join_pandas, asof_join_salted  # noqa: F401
-from .skew import diagnose_conversation_skew, with_turn_features_salted  # noqa: F401
+from .asof import asof_join, asof_join_salted  # noqa: F401
+from .skew import with_turn_features_salted  # noqa: F401
 from .dedup import (  # noqa: F401
     connected_components,
     exact_dedup,
@@ -13,7 +13,6 @@ from .dedup import (  # noqa: F401
 )
 from .similarity import (  # noqa: F401
     cosine_topk,
-    cosine_topk_pandas,
     embedding_near_dup,
     ivf_assign,
     ivf_topk,
@@ -26,9 +25,4 @@ from .encoders import (  # noqa: F401
     quantile_bin,
     target_encode_expanding,
 )
-from .text_analysis import (  # noqa: F401
-    with_fingerprint,
-    with_lang_id,
-    with_quality_score,
-    with_token_counts,
-)
+from .text_analysis import with_fingerprint, with_token_counts  # noqa: F401

@@ -6,17 +6,12 @@ arbitrary right-side density, and AQE handles join-side skew. Tie
 semantics are pinned to ``<=``: a snapshot with ``snap_ts == ts`` IS
 visible to that turn (right rows order before left rows at equal ts).
 
-Cross-check implementation: per-entity ``pd.merge_asof`` via
-applyInPandas — used in tests to validate the window variant, and as
-the escape hatch when the right side carries many columns.
-
 Zero-leakage invariant (tested): no joined value may originate from a
 snapshot with ``snap_ts > ts``.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -497,87 +492,6 @@ def asof_join_bucketed(
         j.groupBy(*by_cols, *keys)
         .agg(*[F.first(c).alias(c) for c in other], *picks)
         .select(*left.columns, *value_cols)
-    )
-
-
-def asof_join_pandas(
-    left: DataFrame,
-    right: DataFrame,
-    on: str = "ts",
-    right_on: str = "snap_ts",
-    by: str = "conv_id",
-    value_cols: list[str] | None = None,
-    strict: bool = False,
-    max_group_rows: int | None = None,
-) -> DataFrame:
-    """CROSS-CHECK variant — not a scale path. Cogroups both sides by
-    entity and runs ``pd.merge_asof`` per group (applyInPandas over a
-    cogroup). Same output contract as ``asof_join``; exists to verify
-    the window variants against an independent engine (pandas).
-
-    Do not ship this at scale: every group funnels through ONE Python
-    worker, so a single mega-entity serializes the whole join behind
-    one Arrow batch (measured 10x slower than the union-window variant
-    on uniform data; unboundedly worse under skew). Use ``asof_join``
-    (union-window) or ``asof_join_salted`` (skew-safe) for production.
-    ``max_group_rows`` makes that contract executable: when set, any
-    cogroup whose combined row count exceeds it raises at execution
-    time with a pointer to ``asof_join_salted`` instead of silently
-    stalling a worker."""
-    left = ensure_ltz(left, on)
-    right = ensure_ltz(right, right_on)
-    if value_cols is None:
-        value_cols = [c for c in right.columns if c not in [by, right_on]]
-
-    out_schema = left.schema
-    from pyspark.sql import types as T
-
-    fields = list(out_schema.fields) + [right.schema[c] for c in value_cols]
-    schema = T.StructType(fields)
-    allow_exact = not strict
-    left_cols = left.columns
-
-    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if max_group_rows is not None and len(lpdf) + len(rpdf) > max_group_rows:
-            raise ValueError(
-                f"asof_join_pandas: cogroup has {len(lpdf) + len(rpdf)} rows "
-                f"(> max_group_rows={max_group_rows}); this cross-check variant "
-                "funnels each entity through one Python worker — use "
-                "asof_join_salted for skewed/large entities"
-            )
-        if lpdf.empty:
-            return pd.DataFrame(columns=left_cols + value_cols)
-        lpdf = lpdf.sort_values(on, kind="mergesort")
-        if rpdf.empty:
-            for c in value_cols:
-                lpdf[c] = None
-            return lpdf
-        # sort by value cols too: merge_asof keeps the LAST tied right
-        # row, so this pins the same max-value-at-tied-ts pick as the
-        # window variants (deterministic across input partitionings).
-        # na_position='first' = Spark's NULLS FIRST; the per-column
-        # ffill reproduces last(ignorenulls): a NULL in the winning row
-        # falls back to the previous non-null of that column, exactly
-        # as the window variant does per column.
-        rpdf = rpdf.sort_values(
-            [right_on] + value_cols, kind="mergesort", na_position="first"
-        )
-        rpdf = rpdf.copy()
-        rpdf[value_cols] = rpdf[value_cols].ffill()
-        merged = pd.merge_asof(
-            lpdf,
-            rpdf[[right_on] + value_cols],
-            left_on=on,
-            right_on=right_on,
-            direction="backward",
-            allow_exact_matches=allow_exact,
-        )
-        return merged[left_cols + value_cols]
-
-    return (
-        left.groupBy(by)
-        .cogroup(right.groupBy(by))
-        .applyInPandas(merge, schema=schema)
     )
 
 

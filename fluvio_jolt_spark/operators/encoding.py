@@ -13,14 +13,14 @@ helpers shrink the feature-stage rows losslessly:
   (one column-pruned, partially-aggregated pass: scan-speed on a
   dictionary-encoded parquet column), so the encoding is lossless by
   construction for the job that captured it.
-* ``conv_key``/``conv_str`` — the generator's ``conv_%08d`` ids
-  round-trip through a plain long (24 B string field → 8 B word).
+* ``conv_key`` — the generator's ``conv_%08d`` ids become a plain
+  long (24 B string field → 8 B word).
 
-The per-row decode work (element_at over a literal array,
-format_string) is a map-side expression after the shuffles — it costs
-CPU in the embarrassingly-parallel regime (measured 0.92 scaling) to
-save bytes in the bandwidth-bound one (~0.65): exactly the right
-trade on both this box and a real cluster's network.
+The per-row decode work (``get`` over a literal array) is a map-side
+expression after the shuffles — it costs CPU in the embarrassingly-
+parallel regime (measured 0.92 scaling) to save bytes in the
+bandwidth-bound one (~0.65): exactly the right trade on both this box
+and a real cluster's network.
 """
 
 from __future__ import annotations
@@ -92,8 +92,3 @@ def dict_decode(col, values: list) -> "F.Column":
 def conv_key(col) -> "F.Column":
     """'conv_%08d' string id → long join/partition key."""
     return F.substring(col, 6, 15).cast("long")
-
-
-def conv_str(col) -> "F.Column":
-    """long key → the original 'conv_%08d' id."""
-    return F.format_string("conv_%08d", col)

@@ -10,10 +10,8 @@ this container); the deterministic fake codec remains for synthetic
 test payloads. Everything Spark-side — schemas, batching, UDF
 signatures, partition sizing — is identical across codec paths.
 
-Scale notes: binary payloads make rows big; the operators here
-repartition by byte-size budget (``repartition_by_bytes``) rather than
-row count, and metadata-only operations prune the binary column at scan
-(column pruning is checked in tests).
+Scale notes: binary payloads make rows big; metadata-only operations
+prune the binary column at scan (column pruning is checked in tests).
 """
 
 from __future__ import annotations
@@ -711,19 +709,3 @@ def extract_video_frame_features(
 
     vids = df.filter(F.col("kind") == "video").select("media_id", payload_col)
     return vids.mapInPandas(feats, schema=out_schema)
-
-
-def repartition_by_bytes(
-    df: DataFrame, payload_col: str = "payload", target_bytes: int = 256 << 20
-) -> DataFrame:
-    """Size partitions by payload bytes, not rows — binary media rows
-    vary by orders of magnitude. One pass to estimate mean row size,
-    then repartition to ceil(total/target)."""
-    stats = df.select(
-        F.count("*").alias("n"), F.avg(F.length(payload_col)).alias("avg_bytes")
-    ).collect()[0]
-    if not stats.n:
-        return df
-    total = stats.n * (stats.avg_bytes or 1)
-    parts = max(1, int(total // target_bytes) + 1)
-    return df.repartition(parts)

@@ -154,9 +154,7 @@ def hash_split(
         raise ValueError(f"fractions must sum to 1 (got {total})")
     u = _unit_hash(F.col(id_col), hash_family)
     assign = None
-    cum = 0.0
-    for name, frac in items[:-1]:
-        cum += frac
+    for name, cum in split_boundaries(fractions):
         cond = u <= F.lit(cum)
         assign = F.when(cond, name) if assign is None else assign.when(cond, name)
     last = items[-1][0]
@@ -165,9 +163,9 @@ def hash_split(
 
 
 def split_boundaries(fractions: "dict[str, float]") -> "list[tuple[str, float]]":
-    """The exact cumulative boundaries ``hash_split`` compares against
-    (all but the last split), accumulated in the same float order — use
-    these literals when reproducing the assignment in another engine."""
+    """The cumulative boundaries ``hash_split`` compares against (all
+    but the last split) — use these literals when reproducing the
+    assignment in another engine."""
     items = list(fractions.items())
     out = []
     cum = 0.0

@@ -3,9 +3,6 @@
 * ``cosine_topk``      — brute-force exact top-k vs one query vector:
                          Catalyst higher-order functions (zip_with /
                          aggregate), one pass, no Python. The baseline.
-* ``cosine_topk_pandas`` — the same in a vectorized Arrow batch with
-                         numpy matmul; wins when k or dims are large
-                         (BLAS beats codegen'd scalar loops).
 * ``lsh_ann_topk``     — random-hyperplane (SRP) LSH bucketing: probe
                          only vectors sharing the query's bucket (and
                          optionally neighboring buckets); the scale path
@@ -54,34 +51,6 @@ def cosine_topk(
     # only k rows per partition reach the driver-side merge. A global
     # Window.orderBy here would shuffle ALL rows to one task.
     return scored.orderBy(F.col("cos_sim").desc(), F.col(id_col)).limit(k)
-
-
-def cosine_topk_pandas(
-    df: DataFrame, query: list[float], k: int = 10, vec_col: str = "embedding", id_col: str = "vec_id"
-) -> DataFrame:
-    """Per-partition numpy top-k then a global k-merge — no full sort,
-    no full shuffle: only ≤ k rows per partition leave the executor."""
-    q = np.asarray(query, dtype=np.float64)
-    qn = np.linalg.norm(q)
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            sims = (m @ q) / (np.linalg.norm(m, axis=1) * qn)
-            top = np.argsort(-sims, kind="stable")[:k]
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy()[top], "cos_sim": sims[top]})
-
-    # preserve the caller's id type (string/int32 ids work too)
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [df.schema[id_col], T.StructField("cos_sim", T.DoubleType(), True)]
-    )
-    partial = df.mapInPandas(score, schema=schema)
-    # global k-merge over ≤ k rows per partition — TakeOrderedAndProject
-    return partial.orderBy(F.col("cos_sim").desc(), F.col(id_col)).limit(k)
 
 
 # ---- SRP-LSH ----

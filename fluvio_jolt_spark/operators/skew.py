@@ -238,17 +238,6 @@ def with_turn_features_salted(
     return result.drop(*drop)
 
 
-def diagnose_conversation_skew(df: DataFrame, top_n: int = 10) -> DataFrame:
-    """Per-conversation row counts (descending) — the operational check
-    before choosing chunk_rows."""
-    return (
-        df.groupBy("conv_id")
-        .agg(F.count("*").alias("n_turns"))
-        .orderBy(F.col("n_turns").desc())
-        .limit(top_n)
-    )
-
-
 def key_skew_profile(df: DataFrame, key_cols: "list[str]") -> DataFrame:
     """Key-distribution profile per candidate join/group key — the
     diagnostic you run BEFORE picking a shuffle strategy at 100 TB:

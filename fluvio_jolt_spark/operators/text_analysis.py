@@ -1,6 +1,6 @@
 """Text-analysis operators for document pipelines — all Catalyst
-expressions (no Python in the hot path): language-ID heuristic, quality
-scoring, token counting, and document fingerprinting.
+expressions (no Python in the hot path): token counting, document
+fingerprinting, quality and repetition filters, and corpus statistics.
 
 These run per-row with no shuffle; at 100 TB they pipeline directly
 over the parquet scan with column pruning (only `text` is read).
@@ -13,13 +13,8 @@ from pyspark.sql import functions as F
 
 from fluvio_jolt_spark.operators.partitioning import fan_out
 
-# Tiny per-language stopword profiles for the n-gram/stopword heuristic.
-_STOPWORDS = {
-    "en": ["the", "a", "of", "and", "to", "in", "is", "that"],
-    "de": ["der", "die", "das", "und", "ist", "nicht", "ein"],
-    "fr": ["le", "la", "les", "et", "est", "un", "une"],
-    "es": ["el", "la", "los", "y", "es", "un", "una"],
-}
+# English stopwords for quality_filter's stopword-ratio rule.
+_EN_STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "that"]
 
 
 def tokens_col(text_col: str = "text"):
@@ -36,42 +31,6 @@ def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
         .withColumn("n_chars", F.length(text_col))
         .withColumn("n_subwords_est", F.ceil(F.length(text_col) / F.lit(4.0)).cast("int"))
     )
-
-
-def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Deterministic quality features + a composite score in [0,1]:
-    type-token ratio, mean word length, stopword ratio, punctuation and
-    digit density, all-caps ratio."""
-    toks = tokens_col(text_col)
-    n = F.size(toks).cast("double")
-    ttr = F.size(F.array_distinct(toks)).cast("double") / n
-    mean_wl = (F.length(text_col).cast("double") - (n - 1)) / n
-    stop = F.size(F.filter(toks, lambda t: t.isin(*_STOPWORDS["en"]))).cast("double") / n
-    punct = (
-        F.length(text_col) - F.length(F.regexp_replace(text_col, r"[.,;:!?]", ""))
-    ).cast("double") / F.length(text_col).cast("double")
-    digits = (
-        F.length(text_col) - F.length(F.regexp_replace(text_col, r"[0-9]", ""))
-    ).cast("double") / F.length(text_col).cast("double")
-    caps = F.size(F.filter(toks, lambda t: t.rlike("^[A-Z]{2,}$"))).cast("double") / n
-
-    out = (
-        df.withColumn("type_token_ratio", ttr)
-        .withColumn("mean_word_len", mean_wl)
-        .withColumn("stopword_ratio", stop)
-        .withColumn("punct_ratio", punct)
-        .withColumn("digit_ratio", digits)
-        .withColumn("caps_ratio", caps)
-    )
-    score = (
-        F.least(F.col("type_token_ratio") * 2, F.lit(1.0)) * 0.3
-        + F.when((F.col("mean_word_len") >= 3) & (F.col("mean_word_len") <= 10), 1.0)
-        .otherwise(0.3)
-        * 0.3
-        + F.least(F.col("stopword_ratio") * 10, F.lit(1.0)) * 0.2
-        + (1 - F.least(F.col("digit_ratio") * 5, F.lit(1.0))) * 0.2
-    )
-    return out.withColumn("quality_score", F.round(score, 6))
 
 
 def with_repetition_stats(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
@@ -114,26 +73,6 @@ def with_repetition_stats(df: DataFrame, text_col: str = "text", n: int = 3) -> 
     return df.withColumn("dup_word_frac", dup_word).withColumn(
         f"dup_{n}gram_frac", dup_gram
     )
-
-
-def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Stopword-profile language ID: score = fraction of tokens in each
-    language's stopword list; argmax wins, 'und' (undetermined) when all
-    scores are 0. One pass, pure expressions."""
-    toks = tokens_col(text_col)
-    n = F.size(toks).cast("double")
-
-    def _stop_ratio(sw: list[str]):
-        # one-arg lambda: F.filter passes the array index to 2-arg lambdas
-        return F.size(F.filter(toks, lambda t: t.isin(*sw))).cast("double") / n
-
-    scores = [(lang, _stop_ratio(sw)) for lang, sw in _STOPWORDS.items()]
-    best = F.greatest(*[s for _, s in scores])
-    pred = F.lit("und")
-    for lang, s in reversed(scores):
-        pred = F.when(s == best, F.lit(lang)).otherwise(pred)
-    pred = F.when(best <= 0, F.lit("und")).otherwise(pred)
-    return df.withColumn("pred_lang", pred).withColumn("lang_score", F.round(best, 6))
 
 
 def with_fingerprint(
@@ -396,10 +335,10 @@ def with_charset_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     column-pruned, zero shuffle.
 
     Adds: n_non_ascii, ascii_ratio, n_control (C0 controls minus
-    tab/newline/CR), n_replacement (U+FFFD). Char-length and digit
-    density live in with_token_counts / with_quality_score — the
-    column names are kept disjoint so the helpers compose on one
-    frame (and `documents` already carries n_chars)."""
+    tab/newline/CR), n_replacement (U+FFFD). Char length lives in
+    with_token_counts — the column names are kept disjoint so the
+    helpers compose on one frame (and `documents` already carries
+    n_chars)."""
     ln = F.length(text_col)
 
     def _count(pattern: str):
@@ -676,7 +615,7 @@ def quality_filter(
     nd = n.cast("double")
     mean_wl = (F.length(text_col).cast("double") - (nd - 1)) / nd
     stop = (
-        F.size(F.filter(toks, lambda t: t.isin(*_STOPWORDS["en"]))).cast("double") / nd
+        F.size(F.filter(toks, lambda t: t.isin(*_EN_STOPWORDS))).cast("double") / nd
     )
     dup_word = F.lit(1.0) - F.size(F.array_distinct(toks)).cast("double") / nd
     # 3-grams by zipping shifted slices (the with_repetition_stats idiom —

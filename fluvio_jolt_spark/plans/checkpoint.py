@@ -13,8 +13,8 @@ A manifest entry records the input fingerprint, row counts in/out,
 wall time, and the lineage descriptor (input path + spec hash + code
 version). Resume = read manifests, skip completed buckets, rerun the
 rest with a pushdown filter on the bucket column — the scan prunes
-completed buckets at the parquet level. Counter metrics come from Spark
-accumulators incremented inside the reshape stage.
+completed buckets at the parquet level. The row counters are
+per-bucket grouped counts of the input and of the written output.
 
 At 100 TB the same structure holds: manifests are tiny JSON (one per
 bucket), the data write is a normal distributed parquet/Iceberg commit,
@@ -118,15 +118,3 @@ class CheckpointedRun:
         report["rows_in"] = sum(in_counts.values())
         report["rows_out"] = sum(out_counts.values())
         return report
-
-
-def reshape_error_counters(spark, reshaped: DataFrame, error_col: str = "text_error") -> dict:
-    """Counter metrics for a reshape output: total rows, error rows,
-    distinct error classes. (Computed as one aggregation; accumulators
-    are avoided because pandas-UDF workers report them at task end only.)"""
-    row = reshaped.agg(
-        F.count("*").alias("rows"),
-        F.count(error_col).alias("errors"),
-        F.approx_count_distinct(error_col).alias("error_kinds"),
-    ).collect()[0]
-    return {"rows": row.rows, "errors": row.errors, "error_kinds": row.error_kinds}

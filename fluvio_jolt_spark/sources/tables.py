@@ -1,10 +1,10 @@
-"""Source abstraction: parquet today, Iceberg-ready interface.
+"""Source abstraction: bucketed managed tables today, Iceberg-ready
+interface.
 
 The engine reads "tables" through TableSource so the physical format is
-swappable: the sandbox has no Iceberg jars, so IcebergSource raises a
-clear error at construction unless the catalog extension is on the
-classpath, while ParquetSource covers local/test runs with identical
-semantics (columnar scan, predicate pushdown, partition pruning).
+swappable: BucketedTableSource writes and reads hash-bucketed parquet
+tables, and IcebergSource raises a clear error at construction unless
+the Iceberg catalog extension is on the classpath.
 
 At cluster scale, switch by config:
   spark.sql.extensions=org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions
@@ -12,8 +12,6 @@ At cluster scale, switch by config:
 """
 
 from __future__ import annotations
-
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -26,42 +24,6 @@ class TableSource:
 
     def write(self, df: DataFrame, name: str, mode: str = "overwrite") -> None:
         raise NotImplementedError
-
-
-class ParquetSource(TableSource):
-    def __init__(self, root: str):
-        self.root = str(root)
-
-    def read(self, spark: SparkSession, name: str) -> DataFrame:
-        return spark.read.parquet(f"{self.root}/{name}.parquet")
-
-    def write(self, df: DataFrame, name: str, mode: str = "overwrite") -> None:
-        df.write.mode(mode).parquet(f"{self.root}/{name}.parquet")
-
-
-class PartitionedParquetSource(TableSource):
-    """Hive-layout partitioned parquet — the sandbox stand-in for an
-    Iceberg time/bucket-partitioned table. Writing declares partition
-    columns; reading gets directory-level PARTITION PRUNING from
-    Catalyst (filters on partition columns never touch excluded files
-    — verified in tests via the scan's `PartitionFilters`).
-
-    The 100 TB layout this models: transcripts partitioned by event day
-    (coarse pruning for time-ranged feature jobs) and optionally
-    bucketed by hash(conv_id) within partitions (co-located entity
-    reads for the window/as-of stages)."""
-
-    def __init__(self, root: str, partition_cols: "tuple[str, ...]" = ("day",)):
-        self.root = str(root)
-        self.partition_cols = list(partition_cols)
-
-    def read(self, spark: SparkSession, name: str) -> DataFrame:
-        return spark.read.parquet(f"{self.root}/{name}")
-
-    def write(self, df: DataFrame, name: str, mode: str = "overwrite") -> None:
-        df.write.mode(mode).partitionBy(*self.partition_cols).parquet(
-            f"{self.root}/{name}"
-        )
 
 
 def suggest_bucket_count(
@@ -146,7 +108,7 @@ class IcebergSource(TableSource):
         if not jvm_ok:
             raise RuntimeError(
                 "Iceberg runtime not on the classpath; add "
-                "iceberg-spark-runtime and the catalog confs, or use ParquetSource"
+                "iceberg-spark-runtime and the catalog confs"
             )
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
@@ -154,16 +116,3 @@ class IcebergSource(TableSource):
 
     def write(self, df: DataFrame, name: str, mode: str = "overwrite") -> None:
         df.writeTo(f"{self.catalog}.{self.db}.{name}").createOrReplace()
-
-
-def open_source(spark: SparkSession, uri: str) -> TableSource:
-    """'parquet:/path' | 'iceberg:catalog.db' → TableSource."""
-    scheme, _, rest = uri.partition(":")
-    if scheme == "parquet":
-        return ParquetSource(rest)
-    if scheme == "iceberg":
-        catalog, _, db = rest.partition(".")
-        return IcebergSource(spark, catalog or "spark_catalog", db or "default")
-    if Path(uri).exists():
-        return ParquetSource(uri)
-    raise ValueError(f"unknown source uri {uri!r}")

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from fluvio_jolt_spark.operators.asof import (
     asof_join,
     asof_join_bucketed,
-    asof_join_pandas,
     asof_join_salted,
 )
 
@@ -29,7 +28,7 @@ def _oracle_merge_asof(lpdf, rpdf, allow_exact=True):
         rg = rpdf[rpdf.conv_id == conv].sort_values("snap_ts", kind="mergesort")
         if rg.empty:
             lg = lg.copy()
-            lg["attr_value"] = None
+            lg["attr_value"] = float("nan")
             frames.append(lg)
             continue
         merged = pd.merge_asof(
@@ -101,19 +100,6 @@ def test_asof_exact_tie_joins(spark):
         .tolist()
     )
     assert pd.isna(strict[0]) and pd.isna(strict[1]) and strict[2] == 1.5
-
-
-def test_asof_pandas_variant_agrees(spark, transcripts_small):
-    left, right = transcripts_small
-    lsub = left.filter("conv_id < 'conv_00000040'")
-    a = asof_join(lsub, right).toPandas()
-    b = asof_join_pandas(lsub, right).toPandas()
-    key = ["conv_id", "turn_idx"]
-    a = a.sort_values(key).reset_index(drop=True)
-    b = b.sort_values(key).reset_index(drop=True)
-    assert len(a) == len(b)
-    aa, bb = a["attr_value"].astype(float), b["attr_value"].astype(float)
-    assert ((aa.isna() & bb.isna()) | (abs(aa - bb) < 1e-9)).all()
 
 
 @pytest.mark.parametrize("chunk_rows", [7, 64])
@@ -218,9 +204,9 @@ def test_asof_salted_boundary_tie_no_leak(spark, strict):
 
 
 def test_asof_duplicate_right_ties_deterministic(spark):
-    """Duplicate right rows at identical (by, snap_ts): all three
-    variants pick the same deterministic value (the max at the tied
-    timestamp)."""
+    """Duplicate right rows at identical (by, snap_ts): the window and
+    salted variants pick the same deterministic value (the max at the
+    tied timestamp)."""
     lpdf = pd.DataFrame(
         {
             "conv_id": ["c1", "c1"],
@@ -239,7 +225,6 @@ def test_asof_duplicate_right_ties_deterministic(spark):
     for fn, kw in [
         (asof_join, {}),
         (asof_join_salted, {"chunk_rows": 1}),
-        (asof_join_pandas, {}),
     ]:
         vals = fn(left, right, **kw).orderBy("turn_idx").toPandas()["attr_value"]
         assert (vals == 9.0).all(), (fn.__name__, vals.tolist())
@@ -283,7 +268,6 @@ def test_asof_multi_value_col_ties_agree(spark):
 
     for fn, kw in [
         (asof_join_salted, {"chunk_rows": 1}),
-        (asof_join_pandas, {}),
         (asof_join_bucketed, {}),
     ]:
         got = fn(left, right, **kw).orderBy("turn_idx").toPandas()
@@ -342,33 +326,6 @@ def test_asof_salted_left_narrow_equivalent(spark, transcripts_small):
     a = {(r["conv_id"], r["turn_idx"]): tuple(r[c] for c in cols) for r in base.collect()}
     b = {(r["conv_id"], r["turn_idx"]): tuple(r[c] for c in cols) for r in hinted.collect()}
     assert a == b
-
-
-def test_asof_pandas_group_row_cap(spark):
-    """asof_join_pandas is a cross-check, not a scale path: the
-    max_group_rows guard turns a silently-stalling mega-entity into an
-    execution-time error pointing at asof_join_salted."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from fluvio_jolt_spark.operators.asof import asof_join_pandas
-
-    left = spark.range(100).select(
-        F.lit("one_entity").alias("conv_id"),
-        F.timestamp_seconds(F.col("id") * 60).alias("ts"),
-        F.col("id").alias("turn_idx"),
-    )
-    right = spark.range(10).select(
-        F.lit("one_entity").alias("conv_id"),
-        F.timestamp_seconds(F.col("id") * 600).alias("snap_ts"),
-        F.col("id").alias("model_version"),
-    )
-    out = asof_join_pandas(left, right, max_group_rows=50)
-    with pytest.raises(Exception, match="asof_join_salted"):
-        out.collect()
-    # generous cap: passes through untouched
-    ok = asof_join_pandas(left, right, max_group_rows=10_000)
-    assert ok.count() == 100
 
 
 def test_asof_tolerance_staleness_bound(spark):
@@ -437,7 +394,7 @@ def _direction_oracle(lpdf, rpdf, direction, allow_exact=True, tol=None):
         lg = lg.sort_values("ts", kind="mergesort")
         if rg.empty:
             m = lg.copy()
-            m["attr_value"] = pd.NA
+            m["attr_value"] = float("nan")
         else:
             kw = dict(
                 left_on="ts", right_on="snap_ts", direction=direction,

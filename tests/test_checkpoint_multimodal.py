@@ -11,14 +11,12 @@ from pyspark.sql import functions as F
 from fluvio_jolt_spark.operators.multimodal import (
     extract_image_features,
     fake_decode_image,
-    repartition_by_bytes,
     sample_video_frames,
     synth_media,
 )
 from fluvio_jolt_spark.plans.checkpoint import (
     BUCKET_COL,
     CheckpointedRun,
-    reshape_error_counters,
     with_bucket,
 )
 
@@ -76,17 +74,6 @@ def test_lineage_recorded(spark, transcripts_small, tmp_path):
     assert doc["rows_in"] > 0
 
 
-def test_error_counters(spark):
-    from fluvio_jolt_spark.operators.reshape import jolt_reshape
-
-    spec = json.dumps([{"operation": "shift", "spec": {"a": {"@(1,missing)": "o"}}}])
-    df = spark.createDataFrame(
-        [('{"a":{"b":1}}',), ('{"ok":1}',), ("bad",)], "text string"
-    )
-    counters = reshape_error_counters(spark, jolt_reshape(df, spec))
-    assert counters == {"rows": 3, "errors": 2, "error_kinds": 2}
-
-
 # ---- multimodal ----
 
 
@@ -119,12 +106,6 @@ def test_video_frame_sampling_prunes_payload(spark, tmp_path):
     plan = frames._jdf.queryExecution().executedPlan().toString()
     read_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
     assert read_schema and "payload" not in read_schema[0], plan
-
-
-def test_repartition_by_bytes(spark):
-    media = synth_media(spark, n=32)
-    out = repartition_by_bytes(media, target_bytes=1 << 12)  # tiny target → many parts
-    assert out.rdd.getNumPartitions() > 1
 
 
 def test_bucket_stability(spark, transcripts_small):

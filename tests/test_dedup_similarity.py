@@ -19,7 +19,6 @@ from fluvio_jolt_spark.operators.dedup import (
 )
 from fluvio_jolt_spark.operators.similarity import (
     cosine_topk,
-    cosine_topk_pandas,
     embedding_near_dup,
     ivf_assign,
     ivf_topk,
@@ -211,14 +210,12 @@ def test_cosine_topk_matches_numpy(spark, emb):
     want = _numpy_topk(pdf, query, 10)
     got = cosine_topk(emb, query, k=10).toPandas()["vec_id"].tolist()
     assert got == want
-
-
-def test_cosine_topk_pandas_agrees(spark, emb):
-    pdf = emb.toPandas()
-    query = [float(x) for x in pdf[pdf.vec_id == 3].embedding.iloc[0]]
-    a = cosine_topk(emb, query, k=8).toPandas()["vec_id"].tolist()
-    b = cosine_topk_pandas(emb, query, k=8).toPandas()["vec_id"].tolist()
-    assert a == b
+    # string ids pass through with their type and the same ranking
+    semb = emb.select(
+        F.concat(F.lit("v"), F.col("vec_id").cast("string")).alias("vec_id"), "embedding"
+    )
+    got_s = cosine_topk(semb, query, k=10).toPandas()["vec_id"].tolist()
+    assert got_s == [f"v{i}" for i in want]
 
 
 def test_lsh_ann_recall(spark, emb):
@@ -431,22 +428,6 @@ def test_ivf_pipeline(spark, emb):
     exact = set(_numpy_topk(pdf, query, 5))
     got = set(ivf_topk(assigned, cents, query, k=5, nprobe=4).toPandas()["vec_id"])
     assert len(exact & got) >= 3
-
-
-def test_cosine_topk_pandas_string_ids(spark, emb):
-    """cosine_topk_pandas derives the id field type from the input
-    schema — string ids must work and agree with the Catalyst variant."""
-    from pyspark.sql import functions as F
-
-    semb = emb.select(
-        F.concat(F.lit("v"), F.col("vec_id").cast("string")).alias("vec_id"), "embedding"
-    )
-    pdf = emb.toPandas()
-    query = [float(x) for x in pdf[pdf.vec_id == 3].embedding.iloc[0]]
-    a = cosine_topk(semb, query, k=8).toPandas()
-    b = cosine_topk_pandas(semb, query, k=8).toPandas()
-    assert a["vec_id"].map(type).eq(str).all()
-    assert sorted(a["vec_id"]) == sorted(b["vec_id"])
 
 
 def test_md5_families_match_xxhash_structure(spark, docs):

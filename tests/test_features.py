@@ -439,6 +439,9 @@ def test_decayed_sum_no_leakage(spark):
     fut = pdf.copy()
     fut["rid"] += 10_000
     fut["ep"] += 3_000_000.0  # strictly after every existing row
+    # whole microseconds again, as in _decay_frame, so createDataFrame's
+    # Arrow cast to timestamp[us] is exact
+    fut["ep"] = np.round(fut["ep"] * 1e6) / 1e6
     fut["ts"] = pd.to_datetime(fut["ep"] * 1e6, unit="us")
     both = spark.createDataFrame(pd.concat([pdf, fut], ignore_index=True))
     with_future = (

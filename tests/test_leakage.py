@@ -9,7 +9,6 @@ import pytest
 from fluvio_jolt_spark.operators.asof import (
     asof_join,
     asof_join_bucketed,
-    asof_join_pandas,
     asof_join_salted,
 )
 
@@ -48,10 +47,9 @@ def poisoned(spark):
     [
         lambda l, r: asof_join(l, r),
         lambda l, r: asof_join_salted(l, r, chunk_rows=2),
-        lambda l, r: asof_join_pandas(l, r),
         lambda l, r: asof_join_bucketed(l, r, key_cols=("turn_idx",)),
     ],
-    ids=["window", "salted", "merge_asof", "bucketed"],
+    ids=["window", "salted", "bucketed"],
 )
 def test_future_sentinel_never_joins(spark, poisoned, variant):
     left, right = poisoned

@@ -7,9 +7,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from fluvio_jolt_spark.operators.text_analysis import (
+    with_charset_stats,
     with_fingerprint,
-    with_lang_id,
-    with_quality_score,
+    with_pii_scan,
     with_token_counts,
 )
 
@@ -30,30 +30,6 @@ def test_token_counts(spark, docs):
         assert r.n_chars == len(r.text)
 
 
-def test_quality_score_range(spark, docs):
-    out = with_quality_score(docs).toPandas()
-    assert ((out.quality_score >= 0) & (out.quality_score <= 1)).all()
-    assert ((out.type_token_ratio > 0) & (out.type_token_ratio <= 1)).all()
-
-
-def test_lang_id_mostly_en(spark, docs):
-    """The synthetic docs use English-ish filler containing 'the'/'a'."""
-    out = with_lang_id(docs).toPandas()
-    assert (out.pred_lang == "en").mean() > 0.5
-
-
-def test_lang_id_on_synthetic_langs(spark):
-    rows = [
-        (1, "the cat and the dog is in the house of the king"),
-        (2, "der hund und die katze ist nicht ein tier der welt"),
-        (3, "le chat et la maison est un lieu les arbres"),
-        (4, "xyzzy qwerty zzz"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r.pred_lang for r in with_lang_id(df).collect()}
-    assert got == {1: "en", 2: "de", 3: "fr", 4: "und"}
-
-
 def test_fingerprint_normalization(spark):
     df = spark.createDataFrame(
         [(1, "Hello   World"), (2, "hello world"), (3, "different text")],
@@ -65,7 +41,7 @@ def test_fingerprint_normalization(spark):
 
 
 def test_text_ops_are_narrow(spark, docs):
-    out = with_quality_score(with_lang_id(with_token_counts(docs)))
+    out = with_charset_stats(with_pii_scan(with_fingerprint(with_token_counts(docs))))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "BatchEvalPython" not in plan  # no Python UDFs in the hot path
@@ -73,8 +49,6 @@ def test_text_ops_are_narrow(spark, docs):
 
 def test_pii_scan_planted(spark):
     """Planted positives/negatives for every pattern class."""
-    from fluvio_jolt_spark.operators.text_analysis import with_pii_scan
-
     df = spark.createDataFrame(
         [
             (0, "contact me at alice.smith+work@example.co.uk thanks"),
@@ -272,8 +246,6 @@ def test_token_entropy_matches_bruteforce(spark):
 
 def test_charset_stats_planted_mojibake(spark):
     import pandas as pd
-
-    from fluvio_jolt_spark.operators.text_analysis import with_charset_stats
 
     docs = spark.createDataFrame(
         pd.DataFrame({
